@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main — driver contract: the LAST stdout line is one compact
   * JSON object `{"metric":"total","value":…}` (scalars + bounded flag
   * lists only — the driver's tail capture is finite and a 73-query dict
@@ -10,29 +8,20 @@ import org.apache.spark.sql.SparkSession
   * bench_history.jsonl for cross-round drift detection.
   *
   * Methodology: a warmup pass first touches every input table, then each
-  * query runs once untimed (codegen compile + JIT + FS cache) and once
-  * timed, in sorted name order — so the reported number is steady-state
-  * per-query latency, not whichever query happened to pay session warmup.
-  * Set SPARK_GRAFT_BENCH_COLD=1 to skip the per-query warmup run.
+  * query runs once untimed (codegen compile + JIT + FS cache) and then
+  * SPARK_GRAFT_BENCH_REPS times (default 3) timed, in sorted name order —
+  * so the reported number is steady-state per-query latency, not whichever
+  * query happened to pay session warmup.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession.start("graft-bench")
 
     // warmup: touch inputs + exercise codegen/shuffle machinery once
     Tables.names.foreach { t =>
       try Tables.load(spark, sfDir, t).count() catch { case _: Throwable => () }
     }
-    val coldOnly = sys.env.get("SPARK_GRAFT_BENCH_COLD").contains("1")
     // N timed runs (after the untimed warmup): a single sample is hostage
     // to co-tenant noise on shared hosts. The headline number stays the
     // minimum (the engine's actual cost); the median and the relative
@@ -64,8 +53,7 @@ object Bench {
     // the corresponding full query — summing both would double-count
     val results = (SparkEntry.benchQueries ++ SparkEntry.benchComponents)
       .toSeq.sortBy(_._1).map { case (name, fn) =>
-      if (!coldOnly)
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => () }
+      try { fn(spark, sfDir).count() } catch { case _: Throwable => () }
       // a throwing run yields NO sample: its time-to-failure must never
       // enter the min/median/total maps (it would ship a flattering number
       // for a broken query and trip spurious drift flags on the next
@@ -122,24 +110,6 @@ object Bench {
     // line carries only scalars + the normally-empty noisy/drift names.
     val failed = failedSet.map("\"" + _ + "\"").mkString("[", ",", "]")
     println(s"""{"metric":"detail","reps":$reps,"retried":$retriedNames,"failed":$failed,"drift":$driftJson,"queries":$qs,"queries_median":$med,"queries_spread":$spr,"sf":"$sfDir"}""")
-    // Driver-parsable per-query line: the detail line above (3 maps × 101
-    // queries) overflows the driver's finite tail capture, which is why
-    // PERF_r17/r18 ended with per_query:{} and n_common:0. This line carries
-    // ONLY the QUERY min map (components stay on the detail line and in
-    // history — the driver's per-query table never tracked them), values at
-    // 4 significant figures, no other fields — every byte counts against
-    // the tail window (BENCH_r18's stored tail was 2000 bytes) — printed
-    // immediately before the total line so the window's end contains it.
-    def sig4(v: Double): String =
-      if (v == 0.0) "0"
-      else {
-        val scale = 3 - math.floor(math.log10(math.abs(v))).toInt
-        BigDecimal(v).setScale(scale.max(0), BigDecimal.RoundingMode.HALF_UP)
-          .bigDecimal.stripTrailingZeros.toPlainString
-      }
-    val minsCompact = results.filterNot(_._1.contains("."))
-      .map(r => "\"" + r._1 + "\":" + sig4(r._2)).mkString("{", ",", "}")
-    println(s"""{"metric":"per_query","mins":$minsCompact}""")
     println(s"""{"metric":"total","value":$total,"unit":"sec","reps":$reps,"failed":$failed,"noisy":$noisy,"drift":$driftJson,"sf":"$sfDir"}""")
     spark.stop()
     if (failedSet.nonEmpty) {

@@ -56,16 +56,8 @@ object FullScaleBench {
     val src = args.headOption.getOrElse("/root/testdata/sf0.1")
     val work = if (args.length > 1) args(1) else "/tmp/graft_fullscale"
     val scale = if (args.length > 2) args(2).toInt else 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession.start("graft-fullscale")
+    val cpus = spark.sparkContext.defaultParallelism
 
     val dir = work + "/corpus"
     val fs = new org.apache.hadoop.fs.Path(dir)
@@ -92,7 +84,7 @@ object FullScaleBench {
         k64.foreach(c => df = df.withColumn(c, col(c) + col("rep") * Int64Stride))
         k32.foreach(c => df = df.withColumn(c,
           (col(c) + col("rep") * Int32Stride).cast("int")))
-        df.drop("rep").repartition(cpus.toInt)
+        df.drop("rep").repartition(cpus)
           .write.mode("overwrite").parquet(out.toString)
       }
     }

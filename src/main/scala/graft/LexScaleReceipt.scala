@@ -1,7 +1,6 @@
 package graft
 
 import graft.operators.{Bm25, Bm25Store}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale receipt for the persisted lexical index (SURVEY §4h): the claim
@@ -36,15 +35,8 @@ object LexScaleReceipt {
     val src = args.headOption.getOrElse("/root/testdata/sf0.1")
     val work = if (args.length > 1) args(1) else "/tmp/graft_lexscale"
     val scale = if (args.length > 2) args(2).toInt else 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession.start("graft-lexscale-receipt")
+    val cpus = spark.sparkContext.defaultParallelism
 
     val query = Bm25.DefaultQuery
     val dir = work + "/corpus"
@@ -71,7 +63,7 @@ object LexScaleReceipt {
             .otherwise(regexp_replace(col("text"), "(\\S+)", "$1q")).as("text"),
           col("lang"), col("source"))
         .withColumn("n_chars", length(col("text")).cast("long"))
-        .repartition(cpus.toInt)
+        .repartition(cpus)
         .write.mode("overwrite").parquet(docPath.toString)
     }
 

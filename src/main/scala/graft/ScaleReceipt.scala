@@ -1,7 +1,7 @@
 package graft
 
 import graft.operators.{AnnHnsw, AnnIvf, AnnIvfPq, AnnPq}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** The sf1-class scale receipt for the persisted ANN stores (SURVEY §4):
@@ -28,15 +28,8 @@ object ScaleReceipt {
     val src = args.headOption.getOrElse("/root/testdata/sf0.1")
     val work = if (args.length > 1) args(1) else "/tmp/graft_scale"
     val scale = if (args.length > 2) args(2).toInt else 500
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession.start("graft-scale-receipt")
+    val cpus = spark.sparkContext.defaultParallelism
 
     val dir = work + "/corpus"
     val fs = new org.apache.hadoop.fs.Path(dir)
@@ -52,7 +45,7 @@ object ScaleReceipt {
           transform(col("embedding"),
             x => x * (lit(1.0) + (col("rep") % 97) / lit(1000.0))).as("embedding"),
           col("label"))
-        .repartition(cpus.toInt)
+        .repartition(cpus)
         .write.mode("overwrite").parquet(embPath.toString)
     }
     val n = spark.read.parquet(embPath.toString).count()
@@ -206,7 +199,7 @@ object ScaleReceipt {
           transform(col("embedding"), x => x * lit(1.0002)))
           .otherwise(col("embedding")).as("embedding"),
         col("label"))
-      .repartition(cpus.toInt)
+      .repartition(cpus)
       .write.mode("overwrite").parquet(staged.toString)
     fs.delete(embPath, true)
     fs.rename(staged, embPath)

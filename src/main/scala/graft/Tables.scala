@@ -30,7 +30,7 @@ object Tables {
 
   /** Per-path schema memo (r19): `spark.read.parquet` runs a footer-reading
     * schema-inference JOB on every call — one to three such jobs rode every
-    * query invocation (BenchOne's verbose job listing shows them as
+    * query invocation (OPTIMIZATION_r19.md's job listing shows them as
     * `parquet at Tables.scala` lines), pure driver-round latency at any
     * scale (guide §1.2, §6). A table path's schema is a stable property
     * within a session — testdata is immutable, synthesized receipt corpora

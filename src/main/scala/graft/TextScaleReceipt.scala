@@ -1,7 +1,6 @@
 package graft
 
 import graft.operators.{Bm25, Dedup, Pipeline}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** The sf1-class scale receipt for the r11 TEXT operators (SURVEY §4f) —
@@ -25,15 +24,8 @@ object TextScaleReceipt {
     val src = args.headOption.getOrElse("/root/testdata/sf0.1")
     val work = if (args.length > 1) args(1) else "/tmp/graft_textscale"
     val scale = if (args.length > 2) args(2).toInt else 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession.start("graft-textscale-receipt")
+    val cpus = spark.sparkContext.defaultParallelism
 
     val dir = work + "/corpus"
     val fs = new org.apache.hadoop.fs.Path(dir)
@@ -55,7 +47,7 @@ object TextScaleReceipt {
           concat(col("text"), lit(" r"), col("rep")).as("text"),
           col("lang"), col("source"))
         .withColumn("n_chars", length(col("text")).cast("long"))
-        .repartition(cpus.toInt)
+        .repartition(cpus)
         .write.mode("overwrite").parquet(docPath.toString)
     }
     // scaled EMBEDDINGS for the r12 semantic-dedup leg: replicas keep the
@@ -82,7 +74,7 @@ object TextScaleReceipt {
         .withColumn("rep", explode(sequence(lit(0), lit(scale - 1))))
         .select((col("vec_id") + col("rep") * nSrcEmb).as("vec_id"),
           col("embedding"), col("label"))
-        .repartition(cpus.toInt)
+        .repartition(cpus)
         .write.mode("overwrite").parquet(embPath.toString)
       fs.create(schemeMarker, true).close()
     }
@@ -150,7 +142,7 @@ object TextScaleReceipt {
       def once(d: String): Unit = {
         i += 1
         new Graft(spark, d)
-          .buildTrainingSet(work + s"/trainset_$i", numShards = cpus.toInt)
+          .buildTrainingSet(work + s"/trainset_$i", numShards = cpus)
           .collect(); ()
       }
       once(src) // warmup

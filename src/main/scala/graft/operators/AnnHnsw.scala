@@ -238,7 +238,7 @@ object AnnHnsw {
     // embeddings join back and a collect_list prune — was the same
     // O(n·capacity) shuffle+sort disk shape the r16 builder rewrite evicted
     // from layer 0, still alive in the upper layers; the r17 build profile
-    // (tools/AnnBuildProfile, SURVEY §4k) measured the upper-layer loop at
+    // (SURVEY §4k) measured the upper-layer loop at
     // 268 s of the 328 s 240k build, dwarfing the quantizer (11 s) the r16
     // narrative blamed. A block fits task memory by the same capacity rule
     // as a layer-0 cell, so candidates + prune run in ONE flatMapGroups:

@@ -608,7 +608,8 @@ private[graft] object AnnStore {
     * to the sequential order. Tasks must not create tracked checkpoints
     * (the pin scope is thread-local by design). First failure rethrows
     * after every thread finishes, so a crashed build never leaves a
-    * half-written task running behind the raised error.
+    * half-written task running behind the raised error; the other tasks'
+    * failures ride along as its suppressed exceptions.
     */
   private[graft] def inParallel(tasks: Seq[() => Unit]): Unit = {
     val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]
@@ -616,7 +617,11 @@ private[graft] object AnnStore {
       try t() catch { case e: Throwable => errs.add(e) }))
     threads.foreach(_.start())
     threads.foreach(_.join())
-    if (!errs.isEmpty) throw errs.peek()
+    if (!errs.isEmpty) {
+      val first = errs.poll()
+      errs.forEach(e => first.addSuppressed(e))
+      throw first
+    }
   }
 
   /** The k-row centroid matrix as a tiny one-file frame — the shared layout

@@ -1,7 +1,6 @@
 package graft.tools
 
-import graft.{Graft, IndexStore}
-import org.apache.spark.sql.SparkSession
+import graft.{Graft, IndexStore, LocalSession}
 
 /** Usage demo — the reference user's session, batch-style:
   * build an index over a corpus, run a semantic query, read a file range,
@@ -12,13 +11,7 @@ import org.apache.spark.sql.SparkSession
 object Demo {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession.start("graft-demo")
 
     val g = new Graft(spark, sfDir)
 

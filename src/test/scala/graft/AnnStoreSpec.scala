@@ -128,4 +128,17 @@ class AnnStoreSpec extends SparkSpecBase {
     AnnIvf.ensureIvfIndex(spark, dir, idx, k = 4)
     assert(AnnStore.manifestInt(AnnStore.readManifest(spark, idx).get, "k").contains(4))
   }
+
+  test("inParallel rethrows the first task error with the others suppressed") {
+    val ran = new java.util.concurrent.atomic.AtomicInteger(0)
+    val e = intercept[IllegalStateException] {
+      AnnStore.inParallel(Seq(
+        () => throw new IllegalStateException("a"),
+        () => { ran.incrementAndGet(); () },
+        () => throw new IllegalStateException("b")))
+    }
+    assert(ran.get() == 1)
+    assert(e.getSuppressed.length == 1)
+    assert(Set(e.getMessage, e.getSuppressed.head.getMessage) == Set("a", "b"))
+  }
 }
