@@ -69,7 +69,6 @@ final case class HashEmbedder(dim: Int) extends Embedder {
   def name: String = s"graft-hash-embed-v1-d$dim"
 
   def embedFrame(df: DataFrame, textCol: String, outCol: String): DataFrame = {
-    VecExprs.register(df.sparkSession) // idempotent; safe on streaming frames
     df.withColumn(outCol, VecExprs.hashEmbed(col(textCol), dim))
   }
 

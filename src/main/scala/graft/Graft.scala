@@ -25,8 +25,6 @@ class Graft(spark: SparkSession, sfDir: String,
             private val dirSource: Option[Graft.CorpusSource] = None,
             private val frameShape: Option[String] = None,
             embedderOpt: Option[Embedder] = None) {
-  VecExprs.register(spark)
-
   /** The facade's embedding seam (see [[Embedder]]) — default is the
     * oracle-checkable feature hash; a session-backed model drops in here
     * and every surface (build, query, incremental re-embed, derived ANN
@@ -1312,7 +1310,6 @@ class Graft(spark: SparkSession, sfDir: String,
     * paraphrase-level duplicates that lexical MinHash blocking misses.
     */
   def findSemanticDuplicates(k: Int = 0, eps: Double = 0.9): DataFrame = {
-    plans.VecExprs.register(spark)
     // the facade's CACHED index — chunk embedding is the expensive part
     // and must not rerun for a report (train and dedup each materialize
     // the vectors, but both read the cached frame)

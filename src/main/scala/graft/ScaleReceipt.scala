@@ -128,7 +128,6 @@ object ScaleReceipt {
     // anchor) against scored candidates as the beam budget grows, at THIS
     // corpus size. One brute-force pass anchors all sweep points; per-point
     // state is 16 queries × topK rows.
-    graft.plans.VecExprs.register(spark)
     val bruteTop = {
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("query_id")).orderBy(col("score").desc, col("vec_id").asc)

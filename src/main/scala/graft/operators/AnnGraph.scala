@@ -49,7 +49,6 @@ object AnnGraph {
 
   private def assign(spark: SparkSession, sfDir: String,
                      centroids: Array[Array[Double]]): DataFrame = {
-    VecExprs.register(spark)
     assignOver(baseCorpus(spark, sfDir), centroids)
   }
 
@@ -220,7 +219,6 @@ object AnnGraph {
     */
   private def writeGraphIndexWith(spark: SparkSession, sfDir: String, path: String,
                                   k: Int, degree: Int, manifestStr: String): Unit = {
-    VecExprs.register(spark)
     writeGraphIndexOver(spark, baseCorpus(spark, sfDir), path, k, degree,
       manifestStr)
   }
@@ -248,7 +246,6 @@ object AnnGraph {
     // releasingPinned: the build's localCheckpoint blocks (assignment +
     // edges) are corpus-sized and dead once the staged write lands
     AnnStore.releasingPinned(spark) {
-      VecExprs.register(spark) // the build must not depend on a prior caller registering
       val assigned = AnnStore.trackedCheckpoint(assignOver(e, centroids))
       // freshness manifest + staged swap (AnnStore): the live index keeps
       // serving until the atomic rename, and a manifest mismatch (params OR
@@ -346,7 +343,6 @@ object AnnGraph {
   private[graft] def refreshGraphIndexOver(spark: SparkSession, path: String,
                                            newE: DataFrame, newManifest: String,
                                            driftBound: Double = 0.3): DataFrame = {
-    VecExprs.register(spark)
     val k = AnnStore.manifestInt(newManifest, "k").getOrElse(16)
     val degree = AnnStore.manifestInt(newManifest, "degree").getOrElse(8)
     AnnStore.refreshIndex(spark, path, newManifest,
@@ -620,7 +616,6 @@ object AnnGraph {
                                 qRows: Array[(Long, Array[Float])], topK: Int,
                                 filter: Option[Column]): DataFrame = {
     import spark.implicits._
-    VecExprs.register(spark)
     val vectors = spark.read.parquet(indexPath + "/vectors")
     val qFrame = broadcast(qRows.toSeq.toDF("query_id", "qv"))
     val base = filter.map(vectors.filter).getOrElse(vectors)

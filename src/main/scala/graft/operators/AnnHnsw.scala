@@ -130,7 +130,6 @@ object AnnHnsw {
                                         m: Int, degreeUp: Int,
                                         manifestStr: String): Unit =
     AnnStore.releasingPinned(spark) {
-      VecExprs.register(spark)
       // materialize BEFORE k-means: a lazy derived frame (the facade's
       // chunk+embed pipeline) would re-chunk the corpus once per
       // training iteration (the PQ/OPQ Over-builders' convention)
@@ -153,7 +152,6 @@ object AnnHnsw {
                                                      m: Int, degreeUp: Int,
                                                      manifestStr: String): Unit =
     AnnStore.releasingPinned(spark) {
-      VecExprs.register(spark)
       val assigned = AnnStore.trackedCheckpoint(assignTo(e, centroids))
       AnnStore.writeStaged(spark, path, manifestStr) { staging =>
         // layer 0 IS a graph store (same tables, same layout)
@@ -433,9 +431,6 @@ object AnnHnsw {
                             counter: Option[org.apache.spark.util.LongAccumulator])
       : DataFrame = {
     import spark.implicits._
-    // the certification scan's scoring expression — a serve must not
-    // depend on a prior caller (e.g. its own cold build) registering
-    VecExprs.register(spark)
     val maxLvl = storedMaxLvl(spark, indexPath)
     AnnStore.healCompacted(spark, indexPath, layerSubdirs(maxLvl))
     val vectors = spark.read.parquet(indexPath + "/vectors")
@@ -918,7 +913,6 @@ object AnnHnsw {
   def refreshHnswIndex(spark: SparkSession, sfDir: String, path: String,
                        k: Int = 16, degree: Int = 8, m: Int = 4,
                        degreeUp: Int = 8, driftBound: Double = 0.3): DataFrame = {
-    VecExprs.register(spark)
     val manifest = hnswManifest(spark, sfDir, k, degree, m, degreeUp)
     val maxLvl = AnnStore.manifestInt(manifest, "max_lvl").get
     val newE = baseCorpus(spark, sfDir)

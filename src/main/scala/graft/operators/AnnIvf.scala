@@ -39,7 +39,6 @@ object AnnIvf {
     * matrix. Deterministic: seeded from the first k vectors by vec_id.
     */
   def train(spark: SparkSession, sfDir: String, k: Int = 16, iters: Int = 3): Array[Array[Double]] = {
-    VecExprs.register(spark)
     trainOver(Tables.embeddings(spark, sfDir)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("emb")), k, iters)
   }
@@ -101,7 +100,6 @@ object AnnIvf {
   private def writePartitionedIndexWith(spark: SparkSession, sfDir: String,
                                         path: String, k: Int,
                                         manifestStr: String): Array[Array[Double]] = {
-    VecExprs.register(spark)
     writeIndexOver(spark, Tables.embeddings(spark, sfDir), path, k, manifestStr)
   }
 
@@ -148,7 +146,6 @@ object AnnIvf {
   private[graft] def refreshIndexOver(spark: SparkSession, path: String,
                                       newE: DataFrame, newManifest: String,
                                       driftBound: Double = 0.3): DataFrame = {
-    VecExprs.register(spark)
     val k = AnnStore.manifestInt(newManifest, "k").getOrElse(16)
     AnnStore.refreshIndex(spark, path, newManifest,
       // assignment pinned to the STORED codebook, read from the index itself
@@ -270,7 +267,6 @@ object AnnIvf {
     // heal BEFORE anything executes: the probe list's eager checkpoint
     // below may itself scan the vectors table (corpus-vector queries)
     AnnStore.healCompacted(spark, indexPath, Seq("vectors"))
-    VecExprs.register(spark)
     val centroids = AnnStore.servedCentroids(spark, indexPath)
     // checkpointed: bounded (nQueries × nprobe) and executed twice (cid
     // collect + broadcast build) with k-literal scoring in its lineage.
@@ -365,7 +361,6 @@ object AnnIvf {
 
   def annIvf(spark: SparkSession, sfDir: String, nQueries: Int = 10, topK: Int = 5,
              k: Int = 16, nprobe: Int = 2): DataFrame = {
-    VecExprs.register(spark)
     val centroids = train(spark, sfDir, k)
     val e = Tables.embeddings(spark, sfDir)
       .withColumn("cid", nearestCentroid(col("embedding"), centroids))

@@ -74,7 +74,6 @@ object AnnIvfPq {
                                   k: Int, m: Int, ks: Int, iters: Int,
                                   manifest: String): Unit = AnnStore.releasingPinned(spark) {
     import spark.implicits._
-    VecExprs.register(spark)
     // the manifest's dim claim must describe the DATA (see AnnPq's twin) —
     // and m must divide it, or the residual slices silently truncate
     val dimRow = Tables.embeddings(spark, sfDir)
@@ -139,7 +138,6 @@ object AnnIvfPq {
                                                books: Array[Array[Array[Double]]],
                                                manifest: String): Unit =
     AnnStore.releasingPinned(spark) {
-      VecExprs.register(spark)
       val sd = books.head.head.length
       val e = Tables.embeddings(spark, sfDir)
         .select(col("vec_id"), col("embedding"),
@@ -176,7 +174,6 @@ object AnnIvfPq {
   def refreshIvfPqIndex(spark: SparkSession, sfDir: String, path: String,
                         k: Int = 16, m: Int = 8, ks: Int = 16, iters: Int = 3,
                         driftBound: Double = 0.3): DataFrame = {
-    VecExprs.register(spark)
     val manifest = ivfPqManifest(spark, sfDir, k, m, ks, iters)
     AnnStore.refreshIndex(spark, path, manifest,
       assignNew = () => Tables.embeddings(spark, sfDir)
@@ -228,7 +225,6 @@ object AnnIvfPq {
                          topK: Int = 5, nprobe: Int = 2, rerank: Int = 50,
                          excludeSelf: Boolean = false): DataFrame = {
     AnnStore.healCompacted(spark, indexPath, Seq("codes", "vectors"))
-    VecExprs.register(spark)
     val centroids = AnnStore.servedCentroids(spark, indexPath)
     val books = AnnStore.memoizedRead(spark, indexPath, "books")(
       AnnPq.readBooks(spark, indexPath))

@@ -159,7 +159,6 @@ object AnnOpq {
   private def writeOpqIndexWith(spark: SparkSession, sfDir: String, path: String,
                                 m: Int, ks: Int, innerIters: Int, rounds: Int,
                                 manifest: String): Unit = AnnStore.releasingPinned(spark) {
-    VecExprs.register(spark)
     val e = Tables.embeddings(spark, sfDir)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
       .filter(col("emb").isNotNull)
@@ -220,7 +219,6 @@ object AnnOpq {
                                             books: Array[Array[Array[Double]]],
                                             manifest: String): Unit =
     AnnStore.releasingPinned(spark) {
-      VecExprs.register(spark)
       val e = Tables.embeddings(spark, sfDir)
         .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
         .filter(col("emb").isNotNull)
@@ -243,7 +241,6 @@ object AnnOpq {
                                        innerIters: Int, rounds: Int,
                                        manifest: String): Unit =
     AnnStore.releasingPinned(spark) {
-      VecExprs.register(spark)
       val raw = AnnStore.trackedCheckpoint(e0)
       val e = raw
         .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
@@ -278,7 +275,6 @@ object AnnOpq {
   def refreshOpqIndex(spark: SparkSession, sfDir: String, path: String,
                       m: Int = 8, ks: Int = 16, innerIters: Int = 2,
                       rounds: Int = 2, driftBound: Double = 0.3): DataFrame = {
-    VecExprs.register(spark)
     val manifest = opqManifest(spark, sfDir, m, ks, innerIters, rounds)
     val buckets = AnnStore.manifestInt(manifest, "buckets")
       .getOrElse(AnnPq.MinBuckets)
@@ -338,7 +334,6 @@ object AnnOpq {
                        topK: Int = 5, rerank: Int = 50,
                        excludeSelf: Boolean = false): DataFrame = {
     AnnStore.healCompacted(spark, indexPath, Seq("codes", "vectors"))
-    VecExprs.register(spark)
     val books = AnnStore.memoizedRead(spark, indexPath, "books")(
       AnnPq.readBooks(spark, indexPath))
     val rot = AnnStore.memoizedRead(spark, indexPath, "rotation")(
@@ -391,7 +386,6 @@ object AnnOpq {
   def annOpq(spark: SparkSession, sfDir: String, nQueries: Int = 10,
              topK: Int = 5, m: Int = 8, ks: Int = 16, innerIters: Int = 2,
              rounds: Int = 2, rerank: Int = 50): DataFrame = {
-    VecExprs.register(spark)
     val dim = 64
     val sd = dim / m
     val e = Tables.embeddings(spark, sfDir)

@@ -135,7 +135,6 @@ object AnnPq {
                                m: Int, ks: Int, iters: Int,
                                manifest: String): Unit = AnnStore.releasingPinned(spark) {
     import spark.implicits._
-    VecExprs.register(spark)
     val e = Tables.embeddings(spark, sfDir)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
       .cache()
@@ -192,7 +191,6 @@ object AnnPq {
                                       path: String, m: Int, ks: Int,
                                       iters: Int, manifest: String): Unit =
     AnnStore.releasingPinned(spark) {
-      VecExprs.register(spark)
       val e = AnnStore.trackedCheckpoint(e0)
       val emb = e.select(col("vec_id"),
         col("embedding").cast("array<double>").as("emb"))
@@ -215,7 +213,6 @@ object AnnPq {
                                            buckets: Int,
                                            manifest: String): Unit =
     AnnStore.releasingPinned(spark) {
-      VecExprs.register(spark)
       val e = Tables.embeddings(spark, sfDir)
         .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
       AnnStore.writeStaged(spark, path, manifest) { staging =>
@@ -239,7 +236,6 @@ object AnnPq {
   def refreshPqIndex(spark: SparkSession, sfDir: String, path: String,
                      m: Int = 8, ks: Int = 16, iters: Int = 3,
                      driftBound: Double = 0.3): DataFrame = {
-    VecExprs.register(spark)
     val manifest = pqManifest(spark, sfDir, m, ks, iters)
     // params only match when the stored bucket count equals the current
     // manifest's, so assignNew's bucket rule is the STORE's own layout
@@ -350,7 +346,6 @@ object AnnPq {
                       topK: Int = 5, rerank: Int = 50,
                       excludeSelf: Boolean = false): DataFrame = {
     AnnStore.healCompacted(spark, indexPath, Seq("codes", "vectors"))
-    VecExprs.register(spark)
     val books = AnnStore.memoizedRead(spark, indexPath, "books")(
       readBooks(spark, indexPath))
     val m = books.length
@@ -397,7 +392,6 @@ object AnnPq {
     */
   def annPq(spark: SparkSession, sfDir: String, nQueries: Int = 10, topK: Int = 5,
             m: Int = 8, ks: Int = 16, iters: Int = 3, rerank: Int = 50): DataFrame = {
-    VecExprs.register(spark)
     val e = Tables.embeddings(spark, sfDir)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
       .cache()

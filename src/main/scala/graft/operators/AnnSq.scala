@@ -1,7 +1,6 @@
 package graft.operators
 
 import graft.Tables
-import graft.plans.VecExprs
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -46,7 +45,6 @@ object AnnSq {
     */
   def annSq8(spark: SparkSession, sfDir: String,
              nQueries: Int = 10, k: Int = 5): DataFrame = {
-    VecExprs.register(spark)
     val e = Tables.embeddings(spark, sfDir)
     val q = e.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("query_id"),
@@ -171,7 +169,6 @@ object AnnSq {
     */
   def annSq8Served(spark: SparkSession, sfDir: String, indexPath: String,
                    nQueries: Int = 10, k: Int = 5): DataFrame = {
-    VecExprs.register(spark)
     AnnStore.healCompacted(spark, indexPath, Seq("vectors"))
     val corpus = spark.read.parquet(indexPath + "/vectors")
       .select(col("vec_id"),
@@ -189,7 +186,6 @@ object AnnSq {
     */
   def annSq8ServedOver(spark: SparkSession, indexPath: String,
                        queries: DataFrame, k: Int = 5): DataFrame = {
-    VecExprs.register(spark)
     AnnStore.healCompacted(spark, indexPath, Seq("vectors"))
     val corpus = spark.read.parquet(indexPath + "/vectors")
       .select(col("vec_id"),

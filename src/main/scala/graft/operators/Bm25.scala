@@ -315,7 +315,6 @@ object Bm25 {
   def ragHybrid(spark: SparkSession, sfDir: String,
                 query: String = DefaultQuery, topK: Int = 10, dim: Int = 64,
                 bm25From: Option[DataFrame] = None): DataFrame = {
-    VecExprs.register(spark)
     val qv = HashEmbedAlg.embed(query, dim)
     val qvCol = array(qv.map(lit): _*)
     // rank over ROUNDED scores: the BM25 per-doc sum is order-nondeterministic

@@ -53,7 +53,6 @@ object Dedup {
     */
   def dedupNgramJaccard(spark: SparkSession, sfDir: String,
                         k: Int = 3, threshold: Double = 0.5): DataFrame = {
-    TextExprs.register(spark)
     val d = Tables.documents(spark, sfDir)
       .select(col("doc_id"), col("lang"), (col("n_chars") / 50).cast("long").as("len_bucket"),
         sort_array(array_distinct(TextExprs.shingleCodes(col("text"), k))).as("sh"))
@@ -128,7 +127,6 @@ object Dedup {
   def dedupMinhashLsh(spark: SparkSession, sfDir: String,
                       k: Int = 3, numHashes: Int = 16, rowsPerBand: Int = 2,
                       threshold: Double = 0.4): DataFrame = {
-    TextExprs.register(spark)
     val nBands = numHashes / rowsPerBand
     val d = Tables.documents(spark, sfDir)
       .select(col("doc_id"),
@@ -169,7 +167,6 @@ object Dedup {
     */
   def dedupSimhash(spark: SparkSession, sfDir: String,
                    nBlocks: Int = 4, maxHamming: Int = 3): DataFrame = {
-    TextExprs.register(spark)
     // 48-bit simhash: low 24 bits from the mult-31 hash family, high 24 from
     // mult-37 (token codes only carry ~30 usable bits each; two independent
     // families widen the hash without overflowing int64 arithmetic)
@@ -395,7 +392,6 @@ object Dedup {
     */
   def dedupEmbedding(spark: SparkSession, sfDir: String,
                      threshold: Double = 0.30, blocks: Int = 0): DataFrame = {
-    VecExprs.register(spark)
     val nBlocks =
       if (blocks > 0) blocks
       else math.ceil(math.sqrt(2.0 * spark.conf.get("spark.sql.shuffle.partitions").toInt))
@@ -428,7 +424,6 @@ object Dedup {
     */
   def dedupEmbeddingLsh(spark: SparkSession, sfDir: String,
                         threshold: Double = 0.30, planes: Int = 6): DataFrame = {
-    VecExprs.register(spark)
     val e = Tables.embeddings(spark, sfDir)
       .select(col("vec_id"), col("embedding"),
         VecExprs.lshBucket(col("embedding"), planes).as("bucket"))
@@ -474,7 +469,6 @@ object Dedup {
     */
   def dedupSemantic(spark: SparkSession, sfDir: String, k: Int = 0,
                     eps: Double = 0.30): DataFrame = {
-    VecExprs.register(spark)
     val kUse = if (k > 0) k
                else semClusterCountFor(Tables.embeddings(spark, sfDir).count())
     val centroids = AnnIvf.train(spark, sfDir, kUse)

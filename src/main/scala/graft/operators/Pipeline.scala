@@ -94,7 +94,6 @@ object Pipeline {
   def qualityRepetition(spark: SparkSession, sfDir: String,
                         topTokThresh: Double = 0.30,
                         topBigramThresh: Double = 0.20): DataFrame = {
-    TextExprs.register(spark)
     val d = Tables.documents(spark, sfDir)
     val blanked = regexp_replace(col("text"), graft.functions.Text.CjkClass, " ")
     def topFrac(codes: Column, outN: String, outTop: String): DataFrame =
@@ -440,7 +439,6 @@ object Pipeline {
     * shape that works when the corpus is 100 TB but the benchmarks are MBs.
     */
   def contaminationCheck(spark: SparkSession, sfDir: String, k: Int = 5): DataFrame = {
-    TextExprs.register(spark)
     val d = Tables.documents(spark, sfDir)
       .select(col("doc_id"),
         array_distinct(TextExprs.shingleCodes(col("text"), k)).as("sh"))
@@ -489,7 +487,6 @@ object Pipeline {
     */
   def benchmarkBloom(spark: SparkSession, sfDir: String,
                      k: Int = 5, fpp: Double = 0.01): org.apache.spark.util.sketch.BloomFilter = {
-    TextExprs.register(spark)
     val bench = Tables.documents(spark, sfDir)
       .filter(isBenchmark(col("doc_id")))
       .select(explode(array_distinct(
@@ -510,7 +507,6 @@ object Pipeline {
                  k: Int = 5): DataFrame = {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
-    TextExprs.register(docs.sparkSession)
     val bcast = docs.sparkSession.sparkContext.broadcast(bf)
     val outSchema = StructType(Seq(
       StructField("doc_id", LongType, nullable = false),

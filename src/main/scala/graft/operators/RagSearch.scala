@@ -27,7 +27,6 @@ object RagSearch {
     * (path→source, score, snippet, fileSize→n_chars).
     */
   def ragTopK(spark: SparkSession, sfDir: String, queryId: Long = 0L, k: Int = 10): DataFrame = {
-    VecExprs.register(spark)
     val e = Tables.embeddings(spark, sfDir)
     val q = e.filter(col("vec_id") === queryId).select(col("embedding").as("qv"))
     val d = Tables.documents(spark, sfDir)
@@ -69,7 +68,6 @@ object RagSearch {
     */
   def annTopKBatch(spark: SparkSession, sfDir: String,
                    nQueries: Int = 10, k: Int = 5): DataFrame = {
-    VecExprs.register(spark)
     val e = Tables.embeddings(spark, sfDir)
     val q = e.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
@@ -101,7 +99,6 @@ object RagSearch {
   def ragTopKW2v(spark: SparkSession, sfDir: String,
                  nQueries: Int = 5, k: Int = 5,
                  trainPartitions: Int = 0): DataFrame = {
-    VecExprs.register(spark)
     val docs = Tables.documents(spark, sfDir)
     val w2v = graft.Word2VecEmbedder.train(spark, docs,
       dim = 32, minCount = 2, maxIter = 1, numPartitions = trainPartitions)
@@ -133,7 +130,6 @@ object RagSearch {
   def ragTopKTx(spark: SparkSession, sfDir: String,
                 nQueries: Int = 5, k: Int = 5): DataFrame = {
     import spark.implicits._
-    VecExprs.register(spark)
     val docs = Tables.documents(spark, sfDir)
     val tx = graft.TransformerEmbedder.seeded(spark)
     // inference cost is per-ROW compute, so parallelism must come from
@@ -183,7 +179,6 @@ object RagSearch {
                      nQueries: Int = 5, candDepth: Int = 20,
                      k: Int = 5): DataFrame = {
     import spark.implicits._
-    VecExprs.register(spark)
     val docs = Tables.documents(spark, sfDir).select(col("doc_id"), col("text"))
     val tx = graft.TransformerEmbedder.seeded(spark)
     val ce = new graft.CrossEncoder(tx)
@@ -507,8 +502,6 @@ object RagSearch {
 
   /** [[retrievalEval]] over an explicit `(vec_id, embedding, label)` frame. */
   def retrievalEvalOver(e: DataFrame, nQueries: Int, k: Int): DataFrame = {
-    val spark = e.sparkSession
-    VecExprs.register(spark)
     val q = e.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"),
         col("label").as("qlabel"))
@@ -735,8 +728,6 @@ object RagSearch {
   /** [[ragTopKMmr]] over an explicit `(vec_id, embedding)` frame. */
   def ragTopKMmrOver(e: DataFrame, nQueries: Int, k: Int,
                      lambdaRel: Double, candDepth: Int): DataFrame = {
-    val spark = e.sparkSession
-    VecExprs.register(spark)
     val q = e.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
     // nudged: every rounded value in the MMR path must land off the
@@ -860,7 +851,6 @@ object RagSearch {
     */
   def annLsh(spark: SparkSession, sfDir: String,
              nQueries: Int = 10, k: Int = 5, planes: Int = 6, dim: Int = 64): DataFrame = {
-    VecExprs.register(spark)
     val e = Tables.embeddings(spark, sfDir)
       .withColumn("bucket", VecExprs.lshBucket(col("embedding"), planes))
     val q = e.filter(col("vec_id") < nQueries)
@@ -890,7 +880,6 @@ object RagSearch {
     */
   def annTopKFiltered(spark: SparkSession, sfDir: String,
                       nQueries: Int = 10, k: Int = 5): DataFrame = {
-    VecExprs.register(spark)
     val e = Tables.embeddings(spark, sfDir)
     val q = e.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
@@ -932,7 +921,6 @@ object RagSearch {
   def embedChunks(spark: SparkSession, sfDir: String,
                   size: Int = 100, overlap: Int = 20, dim: Int = 64,
                   embedder: Option[graft.Embedder] = None): DataFrame = {
-    VecExprs.register(spark)
     embedder.getOrElse(graft.HashEmbedder(dim))
       .embedFrame(Chunker.chunkDocs(spark, sfDir, size, overlap), "chunk_text", "emb")
       .select(col("doc_id"), col("chunk_idx"),

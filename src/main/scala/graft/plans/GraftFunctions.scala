@@ -4,9 +4,11 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.Expression
 
 /** The single canonical name → expression-builder table for every graft
-  * SQL function. Both install paths consume it — per-session
-  * `register(spark)` and cluster-wide `GraftExtensions` — so they cannot
-  * drift (a function added here exists everywhere).
+  * SQL function. It serves SQL text only: the Column API (`VecExprs`,
+  * `TextExprs`, `VecAgg`) builds its expressions directly and needs no
+  * install. Both SQL install paths consume it — `registerAll` on a running
+  * session and `GraftExtensions` at session build — so they cannot drift
+  * (a function added here exists in both).
   */
 object GraftFunctions {
 

@@ -1,10 +1,10 @@
 package graft.plans
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftSqlBridge.{column, expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.{call_function, lit}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -200,17 +200,14 @@ object TextExprs {
       copy(left = l, right = r)
   }
 
-  /** Delegates to the canonical table (all graft functions, idempotent). */
-  def register(spark: SparkSession): Unit = GraftFunctions.registerAll(spark)
-
+  /** Column API: built straight from the expressions, so no session needs
+    * the `graft_*` SQL functions installed.
+    */
   def tokenCodes(text: Column, mult: Int = 31): Column =
-    call_function("graft_token_codes", text, lit(mult))
-  def shingleCodes(text: Column, k: Int): Column =
-    call_function("graft_shingle_codes", text, lit(k))
-  def minHashSig(codes: Column, n: Int): Column =
-    call_function("graft_minhash_sig", codes, lit(n))
-  def simHash(codes: Column, bits: Int): Column =
-    call_function("graft_simhash", codes, lit(bits))
+    column(TokenCodes(expression(text), mult.toLong))
+  def shingleCodes(text: Column, k: Int): Column = column(ShingleCodes(expression(text), k))
+  def minHashSig(codes: Column, n: Int): Column = column(MinHashSig(expression(codes), n))
+  def simHash(codes: Column, bits: Int): Column = column(SimHash(expression(codes), bits))
   def jaccardSorted(a: Column, b: Column): Column =
-    call_function("graft_jaccard_sorted", a, b)
+    column(JaccardSorted(expression(a), expression(b)))
 }

@@ -1,11 +1,10 @@
 package graft.plans
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -376,7 +375,6 @@ object VecExprs {
     override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
   }
 
-  /** Register SQL-callable wrappers once per session; idempotent. */
   /** Deterministic random-hyperplane LSH bucket — same integer hyperplane
     * family as `Vec.lshBucket` / the DuckDB oracle, in one JVM loop:
     * plane j weight at dim d = ((j·2654435761 + d·40503) mod 9973) − 4986.
@@ -392,14 +390,11 @@ object VecExprs {
     override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
   }
 
-  /** Delegates to the canonical table (all graft functions, idempotent). */
-  def register(spark: SparkSession): Unit = GraftFunctions.registerAll(spark)
-
-  /** Column API. Callers must have invoked `register(spark)` for the session. */
-  def cosineSim(a: Column, b: Column): Column = call_function("graft_cosine", a, b)
-  def hashEmbed(text: Column, dim: Int): Column =
-    call_function("graft_hash_embed", text, org.apache.spark.sql.functions.lit(dim))
-  def lshBucket(emb: Column, planes: Int): Column =
-    call_function("graft_lsh_bucket", emb, org.apache.spark.sql.functions.lit(planes))
-  def dotProd(a: Column, b: Column): Column = call_function("graft_dot", a, b)
+  /** Column API: built straight from the expressions, so no session needs
+    * the `graft_*` SQL functions installed.
+    */
+  def cosineSim(a: Column, b: Column): Column = toColumn(CosineSim(toExpr(a), toExpr(b)))
+  def hashEmbed(text: Column, dim: Int): Column = toColumn(HashEmbed(toExpr(text), dim))
+  def lshBucket(emb: Column, planes: Int): Column = toColumn(LshBucket(toExpr(emb), planes))
+  def dotProd(a: Column, b: Column): Column = toColumn(DotProd(toExpr(a), toExpr(b)))
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import graft.operators.Chunker
-import graft.plans.VecExprs
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -30,7 +29,6 @@ object IndexStream {
                        size: Int = 100, overlap: Int = 20, dim: Int = 64,
                        glob: String = "documents.parquet",
                        embedder: Option[graft.Embedder] = None): DataFrame = {
-    VecExprs.register(spark)
     val docs = spark.readStream
       .schema(docsSchema)
       .option("pathGlobFilter", glob)

@@ -21,7 +21,6 @@ class AnnHnswCertifiedSpec extends graft.SparkSpecBase {
   private val sfDir = "/root/testdata/sf0.001"
 
   private def brute(corpus: DataFrame, nQ: Int, topK: Int): DataFrame = {
-    VecExprs.register(spark)
     val q = corpus.filter(col("vec_id") < nQ)
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
     val w = Window.partitionBy(col("query_id"))

@@ -49,7 +49,6 @@ class AnnHnswFilterSpec extends SparkSpecBase {
     assert(served.count() > 0)
     // emitted scores equal brute-force cosine for the same (query, hit)
     // pairs — the descent kernel shares AnnGraph's exact float arithmetic
-    VecExprs.register(spark)
     val e = Tables.embeddings(spark, sf)
     val bruteScores = e.crossJoin(broadcast(queries))
       .select(col("query_id"), col("vec_id"),

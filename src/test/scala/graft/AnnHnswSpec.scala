@@ -16,7 +16,6 @@ class AnnHnswSpec extends SparkSpecBase {
 
   private def brute(corpus: DataFrame, nQ: Int, topK: Int,
                     excludeSelf: Boolean = true): DataFrame = {
-    VecExprs.register(spark)
     val q = corpus.filter(col("vec_id") < nQ)
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
     val w = Window.partitionBy(col("query_id")).orderBy(col("score").desc, col("vec_id").asc)

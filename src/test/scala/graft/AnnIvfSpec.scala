@@ -219,7 +219,6 @@ class AnnIvfSpec extends SparkSpecBase {
   test("served ANN accepts external query vectors (no self-exclusion, exact scores)") {
     import graft.operators.{AnnGraph, AnnPq}
     import graft.plans.VecExprs
-    VecExprs.register(spark)
     val tmp = java.nio.file.Files.createTempDirectory("graft_extq").toString
     AnnIvf.ensureIvfIndex(spark, sf, tmp + "/ivf")
     AnnPq.ensurePqIndex(spark, sf, tmp + "/pq")

@@ -55,7 +55,6 @@ class AnnRefreshSpec extends SparkSpecBase {
     * a fresh vec_id. All assignments stay in `cell`.
     */
   private def pickCellIds(dir: String, centroids: Array[Array[Double]]): (Int, Seq[Long]) = {
-    VecExprs.register(spark)
     val assigned = Tables.embeddings(spark, dir)
       .select(col("vec_id"),
         VecExprs.centroidAssign(col("embedding").cast("array<double>"), centroids,
@@ -413,7 +412,6 @@ class AnnRefreshSpec extends SparkSpecBase {
 
   test("flat PQ refresh: hash buckets give the codes table a rewrite unit") {
     import graft.operators.AnnPq
-    VecExprs.register(spark)
     val dir = copyCorpus()
     val idx = Files.createTempDirectory("graft_refr_pq").toString + "/idx"
     AnnPq.ensurePqIndex(spark, dir, idx)
@@ -464,7 +462,6 @@ class AnnRefreshSpec extends SparkSpecBase {
 
   test("SQ8 refresh: dirty buckets re-quantized in place, serving stays value-identical") {
     import graft.operators.AnnSq
-    VecExprs.register(spark)
     val dir = copyCorpus()
     val idx = Files.createTempDirectory("graft_refr_sq8").toString + "/idx"
     AnnSq.ensureSqIndex(spark, dir, idx)
@@ -584,7 +581,6 @@ class AnnRefreshSpec extends SparkSpecBase {
   }
 
   test("refresh on a store with an older payload schema costs a rebuild, never a crash") {
-    VecExprs.register(spark)
     val dir = copyCorpus()
     val idx = Files.createTempDirectory("graft_refr_schema").toString + "/idx"
     // simulate a store persisted by an older operator version: no `label`

@@ -22,7 +22,6 @@ class DedupStreamSpec extends SparkSpecBase {
   }
 
   test("JVM-loop shingle codes agree with the HOF shingles+stringCode path") {
-    graft.plans.TextExprs.register(spark)
     val d = Tables.documents(spark, sf).limit(50)
     val both = d.select(
       sort_array(array_distinct(graft.plans.TextExprs.shingleCodes(col("text"), 3))).as("fast"),

@@ -48,7 +48,6 @@ class MmrSpec extends SparkSpecBase {
     // brute-force reference ordering: top-5 by (round(cos,4) desc, vec_id)
     val q = e.filter(col("vec_id") < 5)
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
-    graft.plans.VecExprs.register(spark)
     val sc = e.crossJoin(broadcast(q)).filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id"),
         round(graft.plans.VecExprs.cosineSim(col("embedding"), col("qv")), 4).as("s"))

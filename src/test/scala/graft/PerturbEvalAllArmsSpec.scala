@@ -43,7 +43,6 @@ class PerturbEvalAllArmsSpec extends SparkSpecBase {
     * the stage-1 retriever the rerankers consume.
     */
   private def densePool(poolK: Int): DataFrame = {
-    VecExprs.register(spark)
     val emb = graft.HashEmbedder(64)
     val corpus = emb.embedFrame(docs, "text", "emb")
       .select(col("doc_id").as("vec_id"), col("emb"))
@@ -193,7 +192,6 @@ class PerturbEvalAllArmsSpec extends SparkSpecBase {
         .toDF("vec_id", "label"))
 
   private def bruteVec: DataFrame = {
-    VecExprs.register(spark)
     val corpus = Tables.embeddings(spark, sf)
       .select(col("vec_id"), col("embedding"))
     val w = Window.partitionBy(col("query_id"))
@@ -207,7 +205,6 @@ class PerturbEvalAllArmsSpec extends SparkSpecBase {
   }
 
   test("vector perturbation matrix: every served/compressed ANN family separates from chance") {
-    VecExprs.register(spark)
     // the driver queries' default stores — manifest-gated, built once
     val ivfPath = AnnIvf.defaultIndexPath(sf); AnnIvf.ensureIvfIndex(spark, sf, ivfPath)
     val pqPath = AnnPq.defaultIndexPath(sf); AnnPq.ensurePqIndex(spark, sf, pqPath)

@@ -38,7 +38,6 @@ class PerturbEvalSpec extends SparkSpecBase {
     */
   private def rankedFor(emb: graft.Embedder): DataFrame = {
     import spark.implicits._
-    VecExprs.register(spark)
     val corpus = emb.embedFrame(docs, "text", "emb")
       .select(col("doc_id").as("vec_id"), col("emb"))
     val qv = qRows.map { case (qid, toks) =>

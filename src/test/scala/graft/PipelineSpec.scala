@@ -372,7 +372,6 @@ class PipelineSpec extends SparkSpecBase {
     import spark.implicits._
     import graft.plans.TextExprs
     import graft.operators.Dedup
-    TextExprs.register(spark)
     // 400 mutually-distinct docs that ALL land in one (lang, len_bucket)
     // block (same lang, same n_chars) — the skew shape the old blocking key
     // turned into n(n−1)/2 = 79,800 candidate pairs — plus one genuine
@@ -430,7 +429,6 @@ class PipelineSpec extends SparkSpecBase {
     import graft.operators.Dedup
     import graft.plans.VecExprs
     import spark.implicits._
-    VecExprs.register(spark)
     // three axis-aligned centroids; group A (1,2,3) and group B (10,11)
     // are intra-cluster ε-groups, 20/21 share a cluster but are NOT
     // ε-similar (cos ≈ 0.25 < 0.30) — both must survive

@@ -1,7 +1,6 @@
 package graft
 
 import graft.operators._
-import graft.plans.VecExprs
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -138,7 +137,6 @@ class StoreRefreshPropertySpec extends SparkSpecBase {
       (dir, _, out) => AnnSq.ensureSqIndex(spark, dir, out)))
 
   test("refresh equivalence property: every vector store family, random edit mixes") {
-    VecExprs.register(spark)
     for (fam <- families) {
       val dir = copyCorpus(fam.name)
       val root = Files.createTempDirectory(s"graft_prop_idx_${fam.name}").toString
@@ -159,7 +157,6 @@ class StoreRefreshPropertySpec extends SparkSpecBase {
   }
 
   test("late-interaction store: token-matrix payloads hold the property too") {
-    VecExprs.register(spark)
     val tx = graft.TransformerEmbedder.seeded(spark)
     val docs0 = Tables.documents(spark, sf)
       .select(col("doc_id"), col("text")).limit(120).localCheckpoint()
@@ -220,7 +217,6 @@ class StoreRefreshPropertySpec extends SparkSpecBase {
   }
 
   test("sq8 restamp edge: a float edit too small to move any int8 code rewrites nothing") {
-    VecExprs.register(spark)
     val dir = copyCorpus("sq8edge")
     val root = Files.createTempDirectory("graft_prop_sq8e").toString
     val live = s"$root/live"

@@ -8,7 +8,6 @@ import org.apache.spark.sql.functions._
 class VecSpec extends SparkSpecBase {
 
   test("codegen CosineSim agrees with built-in higher-order-function cosine") {
-    VecExprs.register(spark)
     val e = Tables.embeddings(spark, sf)
     val q = e.filter(col("vec_id") === 0).select(col("embedding").as("qv"))
     val both = e.crossJoin(broadcast(q))
@@ -20,7 +19,6 @@ class VecSpec extends SparkSpecBase {
   }
 
   test("cosine of a vector with itself is ~1") {
-    VecExprs.register(spark)
     val e = Tables.embeddings(spark, sf)
     val self = e.select(VecExprs.cosineSim(col("embedding"), col("embedding")).as("c"))
     val mn = self.agg(min("c")).head().getDouble(0)
@@ -28,7 +26,6 @@ class VecSpec extends SparkSpecBase {
   }
 
   test("HashEmbed is L2-normalized, deterministic, zero for empty text") {
-    VecExprs.register(spark)
     import spark.implicits._
     val df = Seq("hello world hash embed", "hello world hash embed", "", "   ")
       .toDF("t")
@@ -59,7 +56,6 @@ class VecSpec extends SparkSpecBase {
   }
 
   test("LshBucket expression agrees with the higher-order-function reference") {
-    VecExprs.register(spark)
     val e = Tables.embeddings(spark, sf)
     val both = e.select(
       VecExprs.lshBucket(col("embedding"), 6).as("fast"),
@@ -150,5 +146,35 @@ class VecSpec extends SparkSpecBase {
     val plan = decl.queryExecution.executedPlan.toString
     assert(plan.contains("HashAggregate") && !plan.contains("ObjectHashAggregate"),
       s"expected HashAggregateExec, got:\n$plan")
+  }
+
+  test("Column builders need no installed SQL function and equal their graft_* SQL twins") {
+    import graft.plans.{GraftFunctions, TextExprs}
+    import org.apache.spark.sql.SparkSession
+    def input(s: SparkSession) = {
+      import s.implicits._
+      Seq((Seq(1.0, 2.0, 0.5), Seq(0.5, -1.0, 2.0), "the quick brown fox jumps over",
+          Seq(1L, 3L, 5L, 9L), Seq(3L, 5L, 8L)),
+        (Seq(-0.25, 4.0, 1.5), Seq(2.0, 0.0, -3.0), "a b", Seq(7L), Seq.empty[Long]))
+        .toDF("a", "b", "t", "x", "y")
+    }
+    // a new session has its own function registry: nothing graft_* in it
+    val fresh = spark.newSession()
+    assert(!fresh.catalog.functionExists("graft_cosine"))
+    val viaColumns = input(fresh).select(
+      VecExprs.cosineSim(col("a"), col("b")), VecExprs.dotProd(col("a"), col("b")),
+      VecExprs.hashEmbed(col("t"), 16), VecExprs.lshBucket(col("a"), 6),
+      TextExprs.tokenCodes(col("t"), 37), TextExprs.shingleCodes(col("t"), 2),
+      TextExprs.minHashSig(col("x"), 8), TextExprs.simHash(col("x"), 24),
+      TextExprs.jaccardSorted(col("x"), col("y")))
+    GraftFunctions.registerAll(spark)
+    input(spark).createOrReplaceTempView("graft_fn_in")
+    val viaSql = spark.sql(
+      """SELECT graft_cosine(a, b), graft_dot(a, b), graft_hash_embed(t, 16),
+        |  graft_lsh_bucket(a, 6), graft_token_codes(t, 37), graft_shingle_codes(t, 2),
+        |  graft_minhash_sig(x, 8), graft_simhash(x, 24), graft_jaccard_sorted(x, y)
+        |FROM graft_fn_in""".stripMargin)
+    assert(viaColumns.columns.toSeq == viaSql.columns.toSeq)
+    assert(viaColumns.collect().toSeq == viaSql.collect().toSeq)
   }
 }

@@ -243,7 +243,6 @@ class Word2VecEmbedderSpec extends SparkSpecBase {
 
   test("SemDeDup on the learned space: topic clusters block, replica dups fall") {
     import graft.operators.{AnnIvf => Ivf, Dedup}
-    graft.plans.VecExprs.register(spark)
     val w2v = Word2VecEmbedder.train(spark, topicCorpus, dim = 16, maxIter = 5)
     // the corpus plus EXACT replicas of docs 0..4 under fresh ids — the
     // mean-pooled learned vector is identical, the realistic near-dup
