@@ -425,6 +425,14 @@ class Graft(spark: SparkSession, sfDir: String,
     chunkAnnPath
   }
 
+  /** [[ensureChunkAnnIndex]] at an existing index's own k (like
+    * reindexDirectory's refresh) — the serve paths' gate: a caller who
+    * built at k=32 must not get a silent k=16 rebuild from the next query.
+    */
+  private def ensureStoredChunkAnnIndex(): String =
+    ensureChunkAnnIndex(storedChunkAnnManifest
+      .flatMap(m => operators.AnnStore.manifestInt(m, "k")).getOrElse(Graft.DefaultChunkAnnK))
+
   /** Chunk-GRAPH freshness manifest — same contract as [[chunkAnnManifest]]
     * with the graph build's degree riding alongside k.
     */
@@ -531,19 +539,10 @@ class Graft(spark: SparkSession, sfDir: String,
     */
   def ragQueryAnnBatch(queries: Seq[String], topK: Int = 5,
                        nprobe: Int = 2,
-                       filter: Option[Column] = None): DataFrame = operators.AnnStore.releasingPinned(spark) {
-    // the scope releases the probe search's tracked checkpoint once the
-    // bounded hits collect below has consumed it — without it every batch
-    // call leaks one pinned block for the session's lifetime. The returned
-    // frame roots in the parquet probe read + a local hit list, never in
-    // the released checkpoint.
+                       filter: Option[Column] = None): DataFrame = {
     import spark.implicits._
     require(queries.nonEmpty, "ragQueryAnnBatch: empty query batch")
-    // honor an existing index's own k (like reindexDirectory's refresh) —
-    // a caller who built at k=32 must not get a silent k=16 rebuild here
-    val k = storedChunkAnnManifest
-      .flatMap(m => operators.AnnStore.manifestInt(m, "k")).getOrElse(Graft.DefaultChunkAnnK)
-    val path = ensureChunkAnnIndex(k)
+    val path = ensureStoredChunkAnnIndex()
     // embed driver-side with the executors' exact algorithm, ship as a
     // bounded literal frame (nQueries rows) — the corpus side never collects
     val qFrame = queries.zipWithIndex
@@ -586,7 +585,7 @@ class Graft(spark: SparkSession, sfDir: String,
     // the scope releases the adaptive loop's per-round trackedCheckpoints
     // once the bounded hits collect below consumes them — without it every
     // filtered graph query leaks one pinned block per widening round for
-    // the session's lifetime (the same contract as ragQueryAnnBatch)
+    // the session's lifetime
     require(queries.nonEmpty, "ragQueryAnnGraphBatch: empty query batch")
     // honor the stored index's own build params, like the IVF path
     val (k, degree) = chunkGraphParams(storedChunkGraphManifest)
@@ -992,19 +991,17 @@ class Graft(spark: SparkSession, sfDir: String,
     */
   private def servedHybridSetup(): (String, String, Array[Array[Double]]) = {
     val lexPath = ensureChunkLexIndex()
-    val k = storedChunkAnnManifest
-      .flatMap(m => operators.AnnStore.manifestInt(m, "k")).getOrElse(Graft.DefaultChunkAnnK)
-    val annPath = ensureChunkAnnIndex(k)
+    val annPath = ensureStoredChunkAnnIndex()
     operators.AnnStore.healCompacted(spark, annPath, Seq("vectors"))
-    (lexPath, annPath, operators.AnnStore.readCentroids(spark, annPath))
+    (lexPath, annPath, operators.AnnStore.servedCentroids(spark, annPath))
   }
 
   def ragQueryHybridAnn(query: String, topK: Int = 10, nprobe: Int = 2,
                         candDepth: Int = 200): DataFrame = {
     val (lexPath, annPath, centroids) = servedHybridSetup()
     val qv = embedder.embedText(query)
-    val probes = operators.RagSearch.probeIdsFor(qv, centroids, nprobe)
-    val dense = operators.AnnIvf.probeCells(spark, annPath, probes)
+    val dense = operators.AnnIvf.probeCells(spark, annPath,
+      operators.AnnIvf.probeIds(qv, centroids, nprobe))
       .select(col("doc_id"), col("chunk_idx"), col("embedding").as("emb"))
     // the fusion's `index` arg is unused when BOTH legs are overridden —
     // pass the dense frame, never servingIndex: forcing the cached
@@ -1024,16 +1021,11 @@ class Graft(spark: SparkSession, sfDir: String,
     */
   def ragQueryHybridAnnBatch(queries: Seq[String], topK: Int = 10,
                              nprobe: Int = 2, candDepth: Int = 200): DataFrame = {
-    import spark.implicits._
     require(queries.nonEmpty, "ragQueryHybridAnnBatch: empty query batch")
     val (lexPath, annPath, centroids) = servedHybridSetup()
     val qvs = queries.map(embedder.embedText)
-    val probeRows = qvs.zipWithIndex.flatMap { case (qv, i) =>
-      operators.RagSearch.probeIdsFor(qv, centroids, nprobe)
-        .map(cid => (i.toLong, cid, qv.toSeq))
-    }
-    val probeFrame = probeRows.toDF("query_id", "probe_cid", "qv")
-    val cids = probeRows.map(_._2).distinct.sorted
+    val (probeFrame, cids) = operators.AnnIvf.probeFrame(spark,
+      qvs.zipWithIndex.map { case (qv, i) => (i.toLong, qv) }, centroids, nprobe)
     val dense = operators.AnnIvf.probeCells(spark, annPath, cids)
       .join(broadcast(probeFrame), col("cid") === col("probe_cid"))
       .select(col("query_id"), col("doc_id"), col("chunk_idx"),

@@ -180,13 +180,12 @@ object ScaleReceipt {
     val certScored = certAcc.value
 
     val cents = graft.operators.AnnStore.readCentroids(spark, ivfPlainPath)
-    // the REAL probe rule (AnnIvf.probeListOver — the exact expression and
-    // tie order annIvfServedOver executes), not a re-implementation whose
-    // float/tie drift could count different cells on exact score ties;
-    // bounded collect: 16 queries × nprobe cell ids
-    val probeRead = AnnIvf.probeListOver(queries(ivfPlainPath), cents, nprobePlain)
-      .select(col("probe_cid")).collect()
-      .map(r => cellSizes.getOrElse(r.getInt(0), 0L)).sum
+    // the probe rule annIvfServedOver routes by (AnnIvf.probeIds), so the
+    // receipt counts exactly the cells the serve reads; bounded collect:
+    // 16 queries
+    val probeRead = AnnIvf.collectQueries(queries(ivfPlainPath))
+      .flatMap { case (_, qv) => AnnIvf.probeIds(qv, cents, nprobePlain) }
+      .map(cellSizes.getOrElse(_, 0L)).sum
 
     // refresh receipt: dirty ~1/9973 of the corpus (norm-only change —
     // same cells stay affected), staged swap so the read side never sees a

@@ -414,20 +414,6 @@ object AnnGraph {
     dot / (math.sqrt(na) * math.sqrt(nb) + 1e-10)
   }
 
-  /** Float-vs-double variant for probe selection (qv is array<float>, the
-    * centroid literal array<double> — mirrors AnnIvf.probeList's operand
-    * types exactly).
-    */
-  private[operators] def cosineFD(x: Array[Float], y: Array[Double]): Double = {
-    val n = math.min(x.length, y.length)
-    var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-    while (i < n) {
-      val xi = x(i).toDouble; val yi = y(i)
-      dot += xi * yi; na += xi * xi; nb += yi * yi; i += 1
-    }
-    dot / (math.sqrt(na) * math.sqrt(nb) + 1e-10)
-  }
-
   /** Spark's Round(_, 4) on a double, as codegen emits it
     * (BigDecimal.valueOf → HALF_UP at 4 dp) — with a provably-identical
     * fast path. valueOf routes through Double.toString (~1 µs of string
@@ -630,8 +616,8 @@ object AnnGraph {
       .select(col("query_id"), col("rank"), col("vec_id"), col("score"), col("cid"))
   }
 
-  /** Shared serving core: probe selection (driver-side, replicating
-    * AnnIvf.probeList's tie order), one partition-pruned read of the
+  /** Shared serving core: probe selection (driver-side, the shared
+    * [[AnnIvf.probeIds]] rule), one partition-pruned read of the
     * subscribed cells, one shuffle routing cell rows to queries, in-task
     * descent. `ownCells` adds each corpus query's own cell to its explored
     * set (empty for external queries).
@@ -665,11 +651,10 @@ object AnnGraph {
                              entriesPerCell: Int, excludeSelf: Boolean,
                              filter: Option[Column] = None): DataFrame = {
     import spark.implicits._
-    // probe selection replicates AnnIvf.probeList's tie order exactly:
-    // array_sort asc by (s, i) then reverse → desc by s, ties desc by i
+    // probe selection is AnnIvf.probeIds (float → double is exact, so the
+    // probe scores are the float query's)
     val probeSet: Map[Long, Set[Int]] = qvs.map { case (qid, qv) =>
-      qid -> centroids.indices.map(i => (cosineFD(qv, centroids(i)), i))
-        .sorted.reverse.take(nprobe).map(_._2).toSet
+      qid -> AnnIvf.probeIds(qv.map(_.toDouble), centroids, nprobe).toSet
     }
     val cellsOf: Map[Long, Set[Int]] = probeSet.map { case (qid, ps) =>
       qid -> (ps ++ ownCells.get(qid))

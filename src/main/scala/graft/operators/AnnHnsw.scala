@@ -463,9 +463,10 @@ object AnnHnsw {
     // and nothing to scan
     val pairs = for {
       (q, qv) <- qRows.toSeq
+      qd = qv.map(_.toDouble) // exact widening: scores are the float query's
       i <- centroids.indices
       if delta.contains(i)
-      theta = StrictMath.acos(clamp(AnnGraph.cosineFD(qv, centroids(i))))
+      theta = StrictMath.acos(clamp(RagSearch.cosineOf(qd, centroids(i))))
       if StrictMath.cos(math.max(0.0, theta - delta(i))) >= sk(q) - margin
     } yield (q, i)
     counter.foreach(_.add( // certification read volume (self rows included)
@@ -727,8 +728,7 @@ object AnnHnsw {
         case None => qvs.keys.map(_ -> Set(0)).toMap // single-block layer
         case Some(m) =>
           qvs.map { case (q, qv) =>
-            q -> Set(m.indices.maxBy(i =>
-              (AnnGraph.cosineFD(qv, m(i)), -i)))
+            q -> Set(AnnIvf.probeIds(qv.map(_.toDouble), m, 1).head)
           }
       }
     }
@@ -823,8 +823,7 @@ object AnnHnsw {
     val vectors = spark.read.parquet(path + "/vectors")
       .withColumn("embedding", col("embedding").cast("array<float>"))
     val ownCell0 = qvs.map { case (q, qv) =>
-      q -> Set(mainCentroids.indices.maxBy(i =>
-        (AnnGraph.cosineFD(qv, mainCentroids(i)), -i)))
+      q -> Set(AnnIvf.probeIds(qv.map(_.toDouble), mainCentroids, 1).head)
     }
     val cells0 = qvs.keys.map(q =>
       q -> (frontier.getOrElse(q, Nil).map(_._2).toSet ++ ownCell0(q))).toMap

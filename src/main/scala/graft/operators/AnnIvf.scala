@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.Tables
 import graft.plans.VecExprs
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -20,7 +20,12 @@ import org.apache.spark.sql.functions._
   * Serve: a query probes its `nprobe` nearest centroids and exact-reranks
   * only the vectors assigned to those cells. At 100 TB the assignment is the
   * partition key: each cell is a contiguous parquet range, so a probe reads
-  * `nprobe/k` of the corpus instead of all of it.
+  * `nprobe/k` of the corpus instead of all of it. Which cells a query reads
+  * is decided in ONE place, [[probeIds]], on the driver against the k-row
+  * centroid matrix — every cell-routed family (IVF, IVF-PQ, graph, HNSW,
+  * the late store, the hybrid serve) routes through it, with the tie order
+  * of the in-plan assignment ([[VecExprs.centroidAssignEval]]), so a probe
+  * never prefers a cell the assignment left empty.
   *
   * No DuckDB oracle (k-means is not sanely SQL-replicable) — the driver
   * records the rows-only check; the spec bounds recall against brute force.
@@ -205,11 +210,11 @@ object AnnIvf {
 
   /** Serving-path C3: probe search over a [[writePartitionedIndex]]-persisted
     * layout, row-identical to the in-query [[annIvf]] (spec-asserted) with
-    * the k-means training amortized into the index build. The probed cell
-    * ids collect driver-side (bounded: nQueries × nprobe) so the vector
-    * read is a PARTITION-PRUNED scan of nprobe/k of the corpus — the whole
-    * point of the layout at 100 TB — followed by one broadcast join of the
-    * tiny query frame against only the probed cells.
+    * the k-means training amortized into the index build. Probe selection
+    * is [[probeIds]] on the driver, so the vector read is a
+    * PARTITION-PRUNED scan of nprobe/k of the corpus — the whole point of
+    * the layout at 100 TB — followed by one broadcast join of the tiny
+    * query frame against only the probed cells.
     */
   def annIvfServed(spark: SparkSession, indexPath: String, nQueries: Int = 10,
                    topK: Int = 5, nprobe: Int = 2): DataFrame = {
@@ -246,6 +251,11 @@ object AnnIvf {
     * it false, since an id collision between a query and an unrelated
     * corpus vector must not suppress a result.
     *
+    * The query frame collects to the driver (bounded: nQueries rows; a
+    * literal frame, the facade's shape, starts no job), [[probeIds]] picks
+    * each query's cells against the memoized centroids, and the
+    * `(query_id, probe_cid, qv)` probe frame rides back as a literal.
+    *
     * `filter` is FILTERED ANN search — a metadata predicate over the
     * vectors table's payload columns (label, source, …), applied to the
     * pruned probe read BEFORE scoring. Source-translatable predicates
@@ -264,23 +274,93 @@ object AnnIvf {
                        topK: Int = 5, nprobe: Int = 2,
                        excludeSelf: Boolean = false,
                        filter: Option[Column] = None): DataFrame = {
-    // heal BEFORE anything executes: the probe list's eager checkpoint
-    // below may itself scan the vectors table (corpus-vector queries)
+    // heal BEFORE anything executes: the query collect below may itself
+    // scan the vectors table (corpus-vector queries)
     AnnStore.healCompacted(spark, indexPath, Seq("vectors"))
-    val centroids = AnnStore.servedCentroids(spark, indexPath)
-    // checkpointed: bounded (nQueries × nprobe) and executed twice (cid
-    // collect + broadcast build) with k-literal scoring in its lineage.
-    // Tracked: a caller that fully consumes the result inside a
-    // releasingPinned scope (the facade's batch serve) releases this block
-    // instead of leaking one pin per call; standalone calls are unscoped
-    // and keep the bounded pin for the result's lifetime, as before.
-    val q = AnnStore.trackedCheckpoint(
-      probeListOver(queries.select(col("query_id"), col("qv")), centroids, nprobe))
-    // bounded collect: the probe lists only (cell ids, not vectors)
-    val cids = q.select("probe_cid").distinct().collect().map(_.getInt(0)).toSeq
+    val (q, cids) = probeFrame(spark, collectQueries(queries),
+      AnnStore.servedCentroids(spark, indexPath), nprobe)
     val pruned = probeCells(spark, indexPath, cids)
-    val cands = filter.map(pruned.filter).getOrElse(pruned)
-      .join(broadcast(q), col("cid") === col("probe_cid"))
+    topKOf(filter.map(pruned.filter).getOrElse(pruned)
+      .join(broadcast(q), col("cid") === col("probe_cid")), topK, excludeSelf)
+  }
+
+  /** FILTERED serving with ADAPTIVE probe widening — a selective predicate
+    * can empty the probed cells' candidate pool and under-fill topK even
+    * though matching vectors exist in unprobed cells (the classic filtered
+    * -ANN failure). This wrapper re-serves only the under-filled queries
+    * with a doubled nprobe until every query fills or the probes cover all
+    * k cells (at which point the result IS the exact filtered answer).
+    * Driver-side state stays bounded: each round's hits (≤ nQueries × topK
+    * rows, collected once) and the shrinking pending-query list; filled
+    * queries never re-serve.
+    */
+  def annIvfServedOverAdaptive(spark: SparkSession, indexPath: String, queries: DataFrame,
+                               topK: Int = 5, nprobe: Int = 2,
+                               excludeSelf: Boolean = false,
+                               filter: Option[Column] = None): DataFrame = {
+    import scala.jdk.CollectionConverters._
+    import spark.implicits._
+    val kCells = AnnStore.servedCentroids(spark, indexPath).length
+    @annotation.tailrec
+    def widen(pending: Seq[(Long, Array[Double])], np: Int, done: Seq[Row]): DataFrame = {
+      val served = annIvfServedOver(spark, indexPath,
+        pending.map { case (id, qv) => (id, qv.toSeq) }.toDF("query_id", "qv"),
+        topK, np, excludeSelf, filter)
+      val out = served.collect()
+      val counts = out.groupBy(_.getLong(0)).map { case (id, rs) => id -> rs.length }
+      val unfilled = pending.map(_._1).filter(id => counts.getOrElse(id, 0) < topK).toSet
+      if (unfilled.isEmpty || np >= kCells) // all-cells probing is exhaustive
+        spark.createDataFrame((done ++ out).asJava, served.schema).orderBy("query_id", "rank")
+      else widen(pending.filter(q => unfilled(q._1)), math.min(np * 2, kCells),
+        done ++ out.filterNot(r => unfilled(r.getLong(0))))
+    }
+    val qs = collectQueries(queries)
+    if (qs.isEmpty) // empty batch: one plain serve carries the schema
+      annIvfServedOver(spark, indexPath, queries, topK, nprobe, excludeSelf, filter)
+    else widen(qs, math.min(math.max(1, nprobe), kCells), Nil)
+  }
+
+  /** The probe rule — the ONE routing decision of every cell-routed serve:
+    * the `nprobe` cells (clamped to [1, k]) whose centroids score highest
+    * by cosine against `qv`, ties to the LOWER cell id — the order
+    * [[VecExprs.centroidAssignEval]] stores a vector by (strict `>`), so
+    * `probeIds(v, cents, 1).head` is the cell v was assigned to. Driver-
+    * side: the cost is bounded by the k-row centroid matrix, never the
+    * corpus. Cosine numerics are [[RagSearch.cosineOf]] (= CosineSim's).
+    */
+  def probeIds(qv: Array[Double], centroids: Array[Array[Double]], nprobe: Int): Seq[Int] =
+    centroids.indices.map(i => (RagSearch.cosineOf(qv, centroids(i)), i))
+      .sortBy { case (s, i) => (-s, i) }
+      .take(math.max(1, math.min(nprobe, centroids.length)))
+      .map(_._2)
+
+  /** A bounded `(query_id, qv)` frame on the driver, qv widened to double
+    * (exact, so every downstream score is unchanged). Queries without a
+    * vector have no cells to probe and drop out.
+    */
+  private[graft] def collectQueries(queries: DataFrame): Seq[(Long, Array[Double])] =
+    queries.select(col("query_id").cast("long"), col("qv").cast("array<double>"))
+      .collect().toSeq.filterNot(_.isNullAt(1))
+      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
+
+  /** The literal `(query_id, probe_cid, qv)` probe frame — one row per
+    * (query, probed cell) by [[probeIds]] — and the sorted distinct probed
+    * cell ids the pruned read takes.
+    */
+  private[graft] def probeFrame(spark: SparkSession, qs: Seq[(Long, Array[Double])],
+                                centroids: Array[Array[Double]],
+                                nprobe: Int): (DataFrame, Seq[Int]) = {
+    import spark.implicits._
+    val rows = for ((qid, qv) <- qs; cid <- probeIds(qv, centroids, nprobe))
+      yield (qid, cid, qv.toSeq)
+    (rows.toDF("query_id", "probe_cid", "qv"), rows.map(_._2).distinct.sorted)
+  }
+
+  /** Exact cosine rerank of probe candidates, top-`topK` per query by
+    * (score desc, vec_id asc) — the served and in-query searches' shared
+    * tail.
+    */
+  private def topKOf(cands: DataFrame, topK: Int, excludeSelf: Boolean): DataFrame = {
     val scored = (if (excludeSelf) cands.filter(col("vec_id") =!= col("query_id")) else cands)
       .select(col("query_id"), col("vec_id"), col("cid"),
         round(VecExprs.cosineSim(col("embedding"), col("qv")), 4).as("score"))
@@ -291,88 +371,17 @@ object AnnIvf {
       .orderBy("query_id", "rank")
   }
 
-  /** FILTERED serving with ADAPTIVE probe widening — a selective predicate
-    * can empty the probed cells' candidate pool and under-fill topK even
-    * though matching vectors exist in unprobed cells (the classic filtered
-    * -ANN failure). This wrapper re-serves only the under-filled queries
-    * with a doubled nprobe until every query fills or the probes cover all
-    * k cells (at which point the result IS the exact filtered answer).
-    * Driver-side state stays bounded: per-round hit counts (≤ nQueries
-    * rows) and the shrinking query-id list; filled queries never re-serve.
-    */
-  def annIvfServedOverAdaptive(spark: SparkSession, indexPath: String, queries: DataFrame,
-                               topK: Int = 5, nprobe: Int = 2,
-                               excludeSelf: Boolean = false,
-                               filter: Option[Column] = None): DataFrame = {
-    val kCells = AnnStore.servedCentroids(spark, indexPath).length
-    val allIds = queries.select("query_id").distinct().collect().map(_.getLong(0)).toSet
-    if (allIds.isEmpty) // empty batch: one plain serve carries the schema
-      return annIvfServedOver(spark, indexPath, queries, topK, nprobe, excludeSelf, filter)
-    val done = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    var pending = queries
-    var pendingIds = allIds
-    var np = math.min(math.max(1, nprobe), kCells)
-    var continue = pendingIds.nonEmpty
-    while (continue) {
-      val out = AnnStore.trackedCheckpoint(
-        annIvfServedOver(spark, indexPath, pending, topK, np, excludeSelf, filter))
-      val counts = out.groupBy("query_id").count().collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val unfilled = pendingIds.filter(id => counts.getOrElse(id, 0L) < topK)
-      if (unfilled.isEmpty || np >= kCells) {
-        done += out // all-cells probing is exhaustive: nothing more to find
-        continue = false
-      } else {
-        val filled = (pendingIds -- unfilled).toSeq
-        if (filled.nonEmpty) done += out.filter(col("query_id").isin(filled: _*))
-        pending = pending.filter(col("query_id").isin(unfilled.toSeq: _*))
-        pendingIds = unfilled
-        np = math.min(np * 2, kCells)
-      }
-    }
-    done.reduce(_ unionByName _).orderBy("query_id", "rank")
-  }
-
   /** C3: IVF probe search for the first `nQueries` vectors: rank the
-    * candidates in each query's `nprobe` nearest cells by exact cosine.
+    * candidates in each query's `nprobe` nearest cells ([[probeIds]]) by
+    * exact cosine.
     */
-  /** Per-query probe list — the first `nQueries` vectors, each exploded to
-    * its `nprobe` nearest centroids as `probe_cid`. Shared by C3 and C6 so
-    * the probe rule cannot drift between them.
-    */
-  private[operators] def probeList(e: DataFrame, centroids: Array[Array[Double]],
-                                   nQueries: Int, nprobe: Int): DataFrame =
-    probeListOver(e.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qv")), centroids, nprobe)
-
-  /** The probe rule over an arbitrary (query_id, qv) frame — the external-
-    * query twin of [[probeList]], same tie order (score desc, ties by higher
-    * centroid id — array_sort asc then reverse).
-    */
-  private[graft] def probeListOver(q: DataFrame, centroids: Array[Array[Double]],
-                                   nprobe: Int): DataFrame = {
-    val probeScores = centroids.indices.map { i =>
-      struct(VecExprs.cosineSim(col("qv"), array(centroids(i).map(lit): _*)).as("s"),
-        lit(i).as("i"))
-    }
-    q.withColumn("probes", slice(reverse(array_sort(array(probeScores: _*))), 1, nprobe))
-      .select(col("query_id"), col("qv"), explode(col("probes.i")).as("probe_cid"))
-  }
-
   def annIvf(spark: SparkSession, sfDir: String, nQueries: Int = 10, topK: Int = 5,
              k: Int = 16, nprobe: Int = 2): DataFrame = {
     val centroids = train(spark, sfDir, k)
     val e = Tables.embeddings(spark, sfDir)
       .withColumn("cid", nearestCentroid(col("embedding"), centroids))
-    val q = probeList(e, centroids, nQueries, nprobe)
-    val scored = e.join(broadcast(q), col("cid") === col("probe_cid"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"), col("cid"),
-        round(VecExprs.cosineSim(col("embedding"), col("qv")), 4).as("score"))
-    val w = Window.partitionBy(col("query_id")).orderBy(col("score").desc, col("vec_id").asc)
-    scored.withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= topK)
-      .select(col("query_id"), col("rank"), col("vec_id"), col("cid"), col("score"))
-      .orderBy("query_id", "rank")
+    val (q, _) = probeFrame(spark, collectQueries(e.filter(col("vec_id") < nQueries)
+      .select(col("vec_id").as("query_id"), col("embedding").as("qv"))), centroids, nprobe)
+    topKOf(e.join(broadcast(q), col("cid") === col("probe_cid")), topK, excludeSelf = true)
   }
 }

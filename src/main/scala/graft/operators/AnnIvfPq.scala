@@ -234,12 +234,10 @@ object AnnIvfPq {
          dim <- AnnStore.manifestInt(manifest, "dim"))
       require(m * sd == dim,
         s"IVFADC index at $indexPath: books are $m x sub-dim $sd but manifest dim=$dim")
-    // probe rule shared with C3/C6 — per (query, probed cell) rows.
-    // Checkpointed: the frame is bounded (nQueries × nprobe) and is executed
-    // twice (cid collect + broadcast build), and its lineage carries the
-    // k-literal probe-scoring expressions — one evaluation, not two.
-    val q = AnnIvf.probeListOver(queries.select(col("query_id"), col("qv")),
-      centroids, nprobe).localCheckpoint()
+    // the shared probe rule (AnnIvf.probeIds) — literal per (query, probed
+    // cell) rows, picked on the driver from the bounded query frame
+    val qs = AnnIvf.collectQueries(queries)
+    val (q, cids) = AnnIvf.probeFrame(spark, qs, centroids, nprobe)
     val qr = q.join(broadcast(centroidFrame(spark, centroids)),
         col("probe_cid") === col("cid"))
       .withColumn("qres",
@@ -260,8 +258,6 @@ object AnnIvfPq {
     }
     val qnorm = aggregate(col("qres"), lit(0.0), (acc, x) => acc + x * x).as("qn")
     val qt = qr.select(col("query_id") +: col("probe_cid") +: qnorm +: tableCols: _*)
-    // bounded collect: probed cell ids only → the code scan is pruned
-    val cids = q.select("probe_cid").distinct().collect().map(_.getInt(0)).toSeq
     val codes = spark.read.parquet(indexPath + "/codes")
       .filter(col("cid").isin(cids: _*))
     val dist = col("qn") + (0 until m).map(j =>
@@ -278,10 +274,12 @@ object AnnIvfPq {
       .filter(col("cid").isin(cids: _*))
       .select(col("vec_id"), col("embedding"))
     val wE = Window.partitionBy(col("query_id")).orderBy(col("score").desc, col("vec_id").asc)
+    import spark.implicits._
     vectors.join(broadcast(cands), "vec_id")
-      // qv pairs reused from the CHECKPOINTED probe frame — the caller's
-      // queries lineage is never executed a second time
-      .join(broadcast(q.select(col("query_id"), col("qv")).distinct()), "query_id")
+      // qv pairs from the driver-side query list — the caller's queries
+      // lineage is never executed a second time
+      .join(broadcast(qs.map { case (id, qv) => (id, qv.toSeq) }.toDF("query_id", "qv")),
+        "query_id")
       .withColumn("score", round(VecExprs.cosineSim(col("embedding"), col("qv")), 4))
       .withColumn("rank", row_number().over(wE).cast("long"))
       .filter(col("rank") <= topK)

@@ -181,8 +181,8 @@ private[graft] object AnnStore {
 
   /** The release scope for [[trackedCheckpoint]] pins, per thread — a
     * context-wide getPersistentRDDs diff would also sweep up pins a
-    * CONCURRENT reader created inside the window (a serving call's
-    * checkpointed probe frame, a facade cache), and unpersisting a foreign
+    * CONCURRENT reader created inside the window (a graph serve's
+    * adaptive round, a facade cache), and unpersisting a foreign
     * localCheckpoint is data loss, not a recompute (the lineage is
     * truncated). Thread-locality matches the single-writer operating model:
     * maintenance owns its thread; readers on other threads are invisible

@@ -432,7 +432,6 @@ object Bm25Store {
   private def swapStats(spark: SparkSession, path: String): Unit = {
     val fs = AnnStore.fileSystem(spark, path)
     val newStats = statsFrom(spark.read.parquet(path + "/chunks"))
-      .localCheckpoint()
     val staging = new org.apache.hadoop.fs.Path(path + "/.stats.staging")
     if (fs.exists(staging)) fs.delete(staging, true)
     newStats.write.parquet(staging.toString)

@@ -440,7 +440,7 @@ object RagSearch {
     AnnStore.healCompacted(spark, indexPath, Seq("vectors"))
     val centroids = AnnStore.servedCentroids(spark, indexPath)
     val probes: Map[Long, Set[Int]] = queries.map { case (qid, _, pooled) =>
-      qid -> probeIdsFor(pooled, centroids, nprobe).toSet
+      qid -> AnnIvf.probeIds(pooled, centroids, nprobe).toSet
     }.toMap
     val cids = probes.values.flatten.toSeq.distinct.sorted
     val pruned = AnnIvf.probeCells(spark, indexPath, cids)
@@ -816,21 +816,9 @@ object RagSearch {
 
   /** Exactly [[VecExprs.CosineSim]]'s numerics (same accumulation order,
     * same `+ 1e-10` guard) so pool scores and in-group sims live in one
-    * quantization.
+    * quantization — and the driver-side kernel of the probe rule
+    * ([[AnnIvf.probeIds]]).
     */
-  /** Driver-side probe selection against a k-row centroid table — the ONE
-    * IVF routing decision every served arm's driver side makes (the late
-    * store's serve, the facade's fully-served hybrid); ties break to the
-    * lower cell id, matching the in-plan assignment convention.
-    */
-  private[graft] def probeIdsFor(pooled: Array[Double],
-                                 centroids: Array[Array[Double]],
-                                 nprobe: Int): Seq[Int] =
-    centroids.zipWithIndex.map { case (c, i) => (cosineOf(pooled, c), i) }
-      .sortBy { case (s, i) => (-s, i) }
-      .take(math.max(1, math.min(nprobe, centroids.length)))
-      .map(_._2).toSeq
-
   private[graft] def cosineOf(a: Array[Double], b: Array[Double]): Double = {
     val n = math.min(a.length, b.length)
     var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0

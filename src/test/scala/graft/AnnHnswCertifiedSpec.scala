@@ -1,4 +1,4 @@
-package graft.operators // cosineFD/cellStatsOf are private[operators]
+package graft.operators // cellStatsOf is private[operators]
 
 import graft.Tables
 import graft.plans.VecExprs
@@ -85,7 +85,7 @@ class AnnHnswCertifiedSpec extends graft.SparkSpecBase {
       Array.fill(members.head._2.length)(0.37f)
     def clamp(x: Double) = math.min(1.0, math.max(-1.0, x))
     for (qv <- queries; (_, emb, cid) <- members) {
-      val theta = StrictMath.acos(clamp(AnnGraph.cosineFD(qv, centroids(cid))))
+      val theta = StrictMath.acos(clamp(RagSearch.cosineOf(qv.map(_.toDouble), centroids(cid))))
       val bound = StrictMath.cos(math.max(0.0, theta - delta(cid)))
       val actual = AnnGraph.cosineLocal(qv, emb)
       assert(actual <= bound + 1e-9,

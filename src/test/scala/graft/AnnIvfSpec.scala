@@ -341,4 +341,60 @@ class AnnIvfSpec extends SparkSpecBase {
     val recall = (brute intersect hits).size.toDouble / brute.size
     assert(recall >= 0.6, s"recall=$recall")
   }
+
+  test("probe rule: the nearest probe is the cell CentroidAssign stores the vector in, ties included") {
+    import graft.plans.VecExprs
+    import org.apache.spark.sql.catalyst.util.ArrayData
+    val rnd = new scala.util.Random(9)
+    def vec(): Array[Double] = Array.fill(64)(rnd.nextGaussian())
+    val cents = Array.fill(16)(vec())
+    def assigned(v: Array[Double], cs: Array[Array[Double]]): Int =
+      VecExprs.centroidAssignEval(ArrayData.toArrayData(v), cs, useCosine = true)
+    for (v <- Seq.fill(300)(vec()))
+      assert(AnnIvf.probeIds(v, cents, 1).head == assigned(v, cents))
+    // duplicate centroids: every cell has an identical twin at id + 16 —
+    // the probe and the assignment both take the LOWER id, and the twin
+    // comes second
+    val twins = cents ++ cents.map(_.clone)
+    for (v <- Seq.fill(50)(vec())) {
+      val own = assigned(v, twins)
+      assert(own < 16)
+      assert(AnnIvf.probeIds(v, twins, 2) == Seq(own, own + 16))
+    }
+    // a zero vector scores 0 against every centroid: an all-way tie
+    val zero = Array.fill(64)(0.0)
+    assert(AnnIvf.probeIds(zero, cents, 1).head == assigned(zero, cents))
+    assert(AnnIvf.probeIds(zero, cents, 3) == Seq(0, 1, 2))
+  }
+
+  test("probe rule: nprobe clamps to [1, k]") {
+    val rnd = new scala.util.Random(10)
+    val cents = Array.fill(8)(Array.fill(16)(rnd.nextGaussian()))
+    val v = Array.fill(16)(rnd.nextGaussian())
+    assert(AnnIvf.probeIds(v, cents, 0) == AnnIvf.probeIds(v, cents, 1))
+    assert(AnnIvf.probeIds(v, cents, 0).size == 1)
+    assert(AnnIvf.probeIds(v, cents, -3).size == 1)
+    val all = AnnIvf.probeIds(v, cents, cents.length + 5)
+    assert(all.size == cents.length && all.sorted == cents.indices)
+  }
+
+  test("IVF serving on a codebook with a duplicated centroid probes the filled twin") {
+    import graft.operators.AnnStore
+    val path = java.nio.file.Files.createTempDirectory("graft_ivftwin").toString + "/idx"
+    val e = Tables.embeddings(spark, sf)
+    val cents = AnnIvf.trainOver(
+      e.select(col("vec_id"), col("embedding").cast("array<double>").as("emb")), 8)
+    // cells 8..15 duplicate cells 0..7: the assignment fills only the
+    // lower twin, so routing to the upper one would read an empty cell
+    AnnIvf.writeIndexOverWithCentroids(spark, e, path, cents ++ cents.map(_.clone),
+      AnnStore.manifest("ivf", Seq("k" -> 16), "twin"))
+    assert(spark.read.parquet(path + "/vectors").filter(col("cid") >= 8).count() == 0)
+    val queries = e.filter(col("vec_id") < 10)
+      .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
+    val top = AnnIvf.annIvfServedOver(spark, path, queries, topK = 5, nprobe = 1)
+      .filter(col("rank") === 1).select("query_id", "vec_id").collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(top == (0L until 10L).map(q => q -> q).toMap,
+      s"each corpus query must find itself in its own cell: $top")
+  }
 }

@@ -523,11 +523,40 @@ class AnnRefreshSpec extends SparkSpecBase {
       .head().getAs[String]("mode") == "incremental")
     assert(AnnPq.refreshPqIndex(spark, dir, root + "/pq")
       .head().getAs[String]("mode") == "incremental")
+    // the lexical store's incremental tick (postings, chunks AND the
+    // corpus-stats swap)
+    import graft.operators.{Bm25Store, Chunker}
+    val chunks = Chunker.indexBuild(spark, sf).select("doc_id", "chunk_idx", "chunk_text")
+    Bm25Store.writeLexicalIndexOver(spark, chunks, root + "/lex", 16,
+      Bm25Store.manifestFor(16, Seq(), "fp1"))
+    val (eDoc, eIdx) = chunks.select("doc_id", "chunk_idx").head() match {
+      case org.apache.spark.sql.Row(d: Long, c: Long) => (d, c) }
+    val edited = chunks.withColumn("chunk_text",
+      when(col("doc_id") === eDoc && col("chunk_idx") === eIdx,
+        lit("freshly edited chunk about hash join probes")).otherwise(col("chunk_text")))
+    assert(Bm25Store.refreshLexicalIndexOver(spark, root + "/lex", edited,
+      Bm25Store.manifestFor(16, Seq(), "fp2")).head().getString(0) == "incremental")
     // every localCheckpoint block the builds and refreshes pinned is gone —
     // a long-lived session can maintain many indexes without accumulating
     // corpus-sized blocks in executor storage
     assert(spark.sparkContext.getPersistentRDDs.keySet == before,
       "index maintenance must not pin blocks past its own run")
+  }
+
+  test("IVF and IVF-PQ serves pin no block (probe selection is driver-side)") {
+    import graft.operators.AnnIvfPq
+    val root = Files.createTempDirectory("graft_serve_pin").toString
+    AnnIvf.ensureIvfIndex(spark, sf, root + "/ivf")
+    AnnIvfPq.ensureIvfPqIndex(spark, sf, root + "/ivfpq")
+    def queries(path: String) = spark.read.parquet(path + "/vectors")
+      .filter(col("vec_id") < 5).select(col("vec_id").as("query_id"), col("embedding").as("qv"))
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    assert(AnnIvf.annIvfServedOver(spark, root + "/ivf", queries(root + "/ivf"))
+      .collect().nonEmpty)
+    assert(AnnIvfPq.annIvfPqServedOver(spark, root + "/ivfpq", queries(root + "/ivfpq"))
+      .collect().nonEmpty)
+    assert(spark.sparkContext.getPersistentRDDs.keySet == before,
+      "a serve call must not leave a pinned block behind")
   }
 
   test("releasingPinned never sweeps another thread's checkpoint (reader safety)") {
