@@ -2,8 +2,10 @@ package graft
 
 import graft.operators.Chunker
 import graft.plans.VecExprs
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** The user-facing facade — what a user of mcp-rag-server switches to.
   *
@@ -519,15 +521,20 @@ class Graft(spark: SparkSession, sfDir: String,
                   filter: Option[Column] = None): DataFrame =
     ragQueryAnnBatch(Seq(query), topK, nprobe, filter).drop("query_id")
 
-  /** The batched twin of [[ragQueryAnn]]: ONE probe job serves the whole
-    * query batch instead of one per call — the per-serve fixed costs
-    * (centroid read, probe selection, pruned scan setup) amortize across
-    * the batch, and the pruned cell read is the UNION of every query's
-    * probes, read once. Results carry `query_id` = the query's position in
-    * `queries`; within a query the rows are [[ragQueryAnn]]'s exact rows
-    * (spec-asserted). The reference serves one query per MCP call
-    * (reference: src/index.ts:265); batching is the cluster-side surface a
-    * training pipeline actually calls.
+  /** The batched twin of [[ragQueryAnn]]: ONE pruned read serves the
+    * whole query batch — the pruned cell read is the UNION of every
+    * query's probes, read once, and it scores, ranks and carries each
+    * hit's chunk metadata (snippet, `total_tokens`, `file_size`) in the
+    * same pass, so no second read joins the metadata back. The ≤
+    * nQueries × topK hits collect once and come back as an eager, bounded
+    * literal frame sorted on the driver: a `collect()` of the result (or
+    * of [[ragQueryAnn]]'s `drop`) starts no Spark job. Selection ranks by
+    * (score desc, vec_id asc), presentation sorts by (query_id, score
+    * desc, doc_id, chunk_idx). Results carry `query_id` = the query's
+    * position in `queries`; within a query the rows are [[ragQueryAnn]]'s
+    * exact rows (spec-asserted). The reference serves one query per MCP
+    * call (reference: src/index.ts:265); batching is the cluster-side
+    * surface a training pipeline actually calls.
     *
     * `filter` restricts hits to chunks satisfying a metadata predicate
     * over the index's payload columns (`doc_id`, `chunk_idx`,
@@ -540,25 +547,22 @@ class Graft(spark: SparkSession, sfDir: String,
   def ragQueryAnnBatch(queries: Seq[String], topK: Int = 5,
                        nprobe: Int = 2,
                        filter: Option[Column] = None): DataFrame = {
-    import spark.implicits._
     require(queries.nonEmpty, "ragQueryAnnBatch: empty query batch")
     val path = ensureStoredChunkAnnIndex()
-    // embed driver-side with the executors' exact algorithm, ship as a
-    // bounded literal frame (nQueries rows) — the corpus side never collects
-    val qFrame = queries.zipWithIndex
-      .map { case (q, i) => (i.toLong, embedder.embedText(q).toSeq) }
-      .toDF("query_id", "qv")
+    // embed driver-side with the executors' exact algorithm — the probe
+    // frame ships as a bounded literal, the corpus side never collects
+    val qs = queries.zipWithIndex.map { case (q, i) => (i.toLong, embedder.embedText(q)) }
     // one bounded execution of the probe search (≤ nQueries×topK rows);
     // a filtered batch serves ADAPTIVELY — a selective predicate that
     // empties the probed cells widens nprobe for the under-filled queries
     // instead of silently returning fewer than topK matches
-    val hits = (filter match {
-      case Some(_) => operators.AnnIvf.annIvfServedOverAdaptive(spark, path, qFrame,
-        Graft.clampTopK(topK), nprobe, filter = filter)
-      case None => operators.AnnIvf.annIvfServedOver(spark, path, qFrame,
-        Graft.clampTopK(topK), nprobe)
-    }).select(col("query_id"), col("vec_id"), col("cid"), col("score")).collect()
-    chunkHitResults(path, hits)
+    val (hits, schema) = operators.AnnIvf.servedHits(spark, path, qs,
+      Graft.clampTopK(topK), nprobe, filter = filter, adaptive = filter.isDefined,
+      carry = chunkHitColumns)
+    // (query_id, rank, vec_id, cid, score, <chunkHitColumns>) → result shape
+    val shape = Seq(0, 5, 6, 4, 7, 8, 9)
+    annHitFrame(hits.map(r => Row.fromSeq(shape.map(r.get))),
+      StructType(shape.map(schema(_))))
   }
 
   /** The graph-served twin of [[ragQueryAnn]]: beam descent over a
@@ -623,8 +627,9 @@ class Graft(spark: SparkSession, sfDir: String,
     *     NOT the facade embedder, because late interaction needs token
     *     matrices, not pooled vectors).
     *
-    * Every arm ends in [[chunkHitResults]]' pruned metadata join and
-    * returns the same row shape as [[ragQueryAnnBatch]]. Each store is
+    * Every arm but `ivf` ends in [[chunkHitResults]]' pruned metadata
+    * join, and every arm returns [[ragQueryAnnBatch]]'s eager literal
+    * frame, rows and order. Each store is
     * manifest-gated at its own kind-keyed path (chunk params + model +
     * documents fingerprint), built on first use.
     */
@@ -791,24 +796,52 @@ class Graft(spark: SparkSession, sfDir: String,
     path
   }
 
-  /** Shared tail of the chunk-ANN serving paths: join the bounded hit list
-    * back to its chunks' metadata, read from the SAME pruned cells the
-    * search touched — no corpus re-chunk, no full index scan; the
-    * ≤ nQueries×topK hit frame broadcasts against the pruned cells.
+  /** The chunk metadata a served hit presents, projected from its
+    * vectors-table row — the IVF arm carries these through its ranked scan,
+    * the other arms read them in [[chunkHitResults]].
     */
-  private def chunkHitResults(indexPath: String,
-                              hits: Array[org.apache.spark.sql.Row]): DataFrame = {
+  private def chunkHitColumns: Seq[Column] = Seq(col("doc_id"), col("chunk_idx"),
+    substring(col("chunk_text"), 1, 120).as("snippet"),
+    col("token_count").as("total_tokens"), col("file_size"))
+
+  /** Tail of the chunk-ANN arms whose serve yields bare hits (graph, HNSW,
+    * the compressed tiers, late): join the bounded hit list back to its
+    * chunks' metadata, read through [[operators.AnnIvf.probeCells]] from
+    * the SAME pruned cells the search touched — no corpus re-chunk, no
+    * full index scan; the ≤ nQueries×topK hit frame broadcasts against the
+    * pruned cells and the join collects once into [[annHitFrame]].
+    */
+  private def chunkHitResults(indexPath: String, hits: Array[Row]): DataFrame = {
     import spark.implicits._
     val cids = hits.map(_.getAs[Int]("cid")).distinct.toSeq
     val hitScores = hits.map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("vec_id"),
       r.getAs[Double]("score"))).toSeq.toDF("query_id", "vec_id", "score")
-    operators.AnnIvf.probeCells(spark, indexPath, cids)
+    val joined = operators.AnnIvf.probeCells(spark, indexPath, cids)
       .join(broadcast(hitScores), "vec_id")
-      .select(col("query_id"), col("doc_id"), col("chunk_idx"), col("score"),
-        substring(col("chunk_text"), 1, 120).as("snippet"),
-        col("token_count").as("total_tokens"), col("file_size"))
-      .orderBy(col("query_id").asc, col("score").desc,
-        col("doc_id").asc, col("chunk_idx").asc)
+      .select(Seq(col("query_id"), col("score")) ++ chunkHitColumns: _*)
+      .select("query_id", "doc_id", "chunk_idx", "score", "snippet", "total_tokens",
+        "file_size")
+    annHitFrame(joined.collect(), joined.schema)
+  }
+
+  /** Every chunk-ANN arm's answer: the collected `(query_id, doc_id,
+    * chunk_idx, score, snippet, total_tokens, file_size)` hits sorted on the
+    * driver by (query_id asc, score desc, doc_id asc, chunk_idx asc; scores
+    * compare like Spark's, -0.0 = 0.0 and NaN highest), as a literal frame
+    * — eager and bounded (≤ nQueries×topK rows), so acting on it starts no
+    * Spark job. `query_id` and `score` are never null.
+    */
+  private def annHitFrame(hits: Array[Row], schema: StructType): DataFrame = {
+    import scala.jdk.CollectionConverters._
+    val order: Ordering[Row] = (a, b) => {
+      val byQuery = java.lang.Long.compare(a.getLong(0), b.getLong(0))
+      lazy val byScore = SQLOrderingUtil.compareDoubles(b.getDouble(3), a.getDouble(3))
+      lazy val byDoc = java.lang.Long.compare(a.getLong(1), b.getLong(1))
+      if (byQuery != 0) byQuery else if (byScore != 0) byScore
+      else if (byDoc != 0) byDoc else java.lang.Long.compare(a.getLong(2), b.getLong(2))
+    }
+    spark.createDataFrame(hits.sorted(order).toSeq.asJava, StructType(schema.map(f =>
+      if (f.name == "query_id" || f.name == "score") f.copy(nullable = false) else f)))
   }
 
   /** Semantic search for a free-text query: embed driver-side, broadcast the

@@ -5,6 +5,7 @@ import graft.plans.VecExprs
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** IVF (inverted-file) approximate nearest neighbor — the coarse-quantizer
   * scale path (SURVEY §2 C, alongside the LSH variant). This is the "ANN
@@ -201,10 +202,19 @@ object AnnIvf {
     AnnStore.compactIndex(spark, path, Seq("vectors"), targetBytes)
 
   /** Partition-pruned read of the cells a probe list selects (pure — the
-    * serve entries heal crashed-compaction leftovers before any read).
+    * serve entries heal crashed-compaction leftovers before any read). The
+    * vectors table's schema comes through the serve memo
+    * ([[AnnStore.memoizedRead]], keyed on the live manifest), so parquet
+    * schema inference — a Spark job — runs once per store state, not once
+    * per read; a rebuild or refresh rewrites the manifest and rotates the
+    * key. A store with no manifest infers on every read.
     */
-  def probeCells(spark: SparkSession, path: String, cids: Seq[Int]): DataFrame =
-    spark.read.parquet(path + "/vectors").filter(col("cid").isin(cids: _*))
+  def probeCells(spark: SparkSession, path: String, cids: Seq[Int]): DataFrame = {
+    val vectors = path + "/vectors"
+    val schema = AnnStore.memoizedRead(spark, path, "vectors_schema")(
+      spark.read.parquet(vectors).schema)
+    spark.read.schema(schema).parquet(vectors).filter(col("cid").isin(cids: _*))
+  }
 
   def defaultIndexPath(sfDir: String): String = AnnStore.defaultPath("ivf", sfDir)
 
@@ -277,11 +287,22 @@ object AnnIvf {
     // heal BEFORE anything executes: the query collect below may itself
     // scan the vectors table (corpus-vector queries)
     AnnStore.healCompacted(spark, indexPath, Seq("vectors"))
-    val (q, cids) = probeFrame(spark, collectQueries(queries),
-      AnnStore.servedCentroids(spark, indexPath), nprobe)
+    servedRanked(spark, indexPath, collectQueries(queries), topK, nprobe,
+      excludeSelf, filter, Nil).orderBy("query_id", "rank")
+  }
+
+  /** [[annIvfServedOver]]'s pruned read, scored and ranked, for a query
+    * batch already on the driver — unsorted, with the `carry` columns
+    * ([[rankedOf]]) riding each hit. Callers heal the store first.
+    */
+  private def servedRanked(spark: SparkSession, indexPath: String,
+                           qs: Seq[(Long, Array[Double])], topK: Int, nprobe: Int,
+                           excludeSelf: Boolean, filter: Option[Column],
+                           carry: Seq[Column]): DataFrame = {
+    val (q, cids) = probeFrame(spark, qs, AnnStore.servedCentroids(spark, indexPath), nprobe)
     val pruned = probeCells(spark, indexPath, cids)
-    topKOf(filter.map(pruned.filter).getOrElse(pruned)
-      .join(broadcast(q), col("cid") === col("probe_cid")), topK, excludeSelf)
+    rankedOf(filter.map(pruned.filter).getOrElse(pruned)
+      .join(broadcast(q), col("cid") === col("probe_cid")), topK, excludeSelf, carry)
   }
 
   /** FILTERED serving with ADAPTIVE probe widening — a selective predicate
@@ -299,25 +320,48 @@ object AnnIvf {
                                excludeSelf: Boolean = false,
                                filter: Option[Column] = None): DataFrame = {
     import scala.jdk.CollectionConverters._
-    import spark.implicits._
-    val kCells = AnnStore.servedCentroids(spark, indexPath).length
-    @annotation.tailrec
-    def widen(pending: Seq[(Long, Array[Double])], np: Int, done: Seq[Row]): DataFrame = {
-      val served = annIvfServedOver(spark, indexPath,
-        pending.map { case (id, qv) => (id, qv.toSeq) }.toDF("query_id", "qv"),
-        topK, np, excludeSelf, filter)
-      val out = served.collect()
-      val counts = out.groupBy(_.getLong(0)).map { case (id, rs) => id -> rs.length }
-      val unfilled = pending.map(_._1).filter(id => counts.getOrElse(id, 0) < topK).toSet
-      if (unfilled.isEmpty || np >= kCells) // all-cells probing is exhaustive
-        spark.createDataFrame((done ++ out).asJava, served.schema).orderBy("query_id", "rank")
-      else widen(pending.filter(q => unfilled(q._1)), math.min(np * 2, kCells),
-        done ++ out.filterNot(r => unfilled(r.getLong(0))))
-    }
     val qs = collectQueries(queries)
     if (qs.isEmpty) // empty batch: one plain serve carries the schema
       annIvfServedOver(spark, indexPath, queries, topK, nprobe, excludeSelf, filter)
-    else widen(qs, math.min(math.max(1, nprobe), kCells), Nil)
+    else {
+      val (hits, schema) = servedHits(spark, indexPath, qs, topK, nprobe, excludeSelf, filter,
+        adaptive = true)
+      spark.createDataFrame(hits.toSeq.asJava, schema).orderBy("query_id", "rank")
+    }
+  }
+
+  /** The served top-`topK` hits of a query batch already on the driver,
+    * collected ONCE per probe round (≤ nQueries × topK rows), unsorted, with
+    * their schema: [[annIvfServedOver]]'s `(query_id, rank, vec_id, cid,
+    * score)` followed by the `carry` columns ([[rankedOf]]) — the facade
+    * carries its chunk metadata here, so its answer is one pruned read.
+    * `adaptive` re-serves under-filled queries wider
+    * ([[annIvfServedOverAdaptive]]); otherwise one round at `nprobe`.
+    */
+  private[graft] def servedHits(spark: SparkSession, indexPath: String,
+                                qs: Seq[(Long, Array[Double])], topK: Int, nprobe: Int,
+                                excludeSelf: Boolean = false,
+                                filter: Option[Column] = None,
+                                adaptive: Boolean = false,
+                                carry: Seq[Column] = Nil): (Array[Row], StructType) = {
+    AnnStore.healCompacted(spark, indexPath, Seq("vectors"))
+    val kCells = AnnStore.servedCentroids(spark, indexPath).length
+    @annotation.tailrec
+    def widen(pending: Seq[(Long, Array[Double])], np: Int,
+              done: Seq[Row]): (Array[Row], StructType) = {
+      val served = servedRanked(spark, indexPath, pending, topK, np, excludeSelf, filter, carry)
+      val out = served.collect()
+      val counts = out.groupBy(_.getLong(0)).map { case (id, rs) => id -> rs.length }
+      val unfilled = if (!adaptive) Set.empty[Long]
+        else pending.map(_._1).filter(id => counts.getOrElse(id, 0) < topK).toSet
+      if (unfilled.isEmpty || np >= kCells) // all-cells probing is exhaustive
+        ((done ++ out).toArray, served.schema)
+      else widen(pending.filter(q => unfilled(q._1)), math.min(np * 2, kCells),
+        done ++ out.filterNot(r => unfilled(r.getLong(0))))
+    }
+    // probeIds clamps nprobe to [1, k] the same way, so the first round's
+    // cells are the plain serve's
+    widen(qs, math.min(math.max(1, nprobe), kCells), Nil)
   }
 
   /** The probe rule — the ONE routing decision of every cell-routed serve:
@@ -358,17 +402,21 @@ object AnnIvf {
 
   /** Exact cosine rerank of probe candidates, top-`topK` per query by
     * (score desc, vec_id asc) — the served and in-query searches' shared
-    * tail.
+    * ranking rule. Rows are `(query_id, rank, vec_id, cid, score)` followed
+    * by the `carry` columns, candidate columns that ride each kept hit (the
+    * facade's chunk metadata, so presenting a hit needs no second read).
+    * Unsorted: callers order or collect as they need.
     */
-  private def topKOf(cands: DataFrame, topK: Int, excludeSelf: Boolean): DataFrame = {
+  private def rankedOf(cands: DataFrame, topK: Int, excludeSelf: Boolean,
+                       carry: Seq[Column]): DataFrame = {
     val scored = (if (excludeSelf) cands.filter(col("vec_id") =!= col("query_id")) else cands)
-      .select(col("query_id"), col("vec_id"), col("cid"),
-        round(VecExprs.cosineSim(col("embedding"), col("qv")), 4).as("score"))
+      .select(Seq(col("query_id"), col("vec_id"), col("cid"),
+        round(VecExprs.cosineSim(col("embedding"), col("qv")), 4).as("score")) ++ carry: _*)
     val w = Window.partitionBy(col("query_id")).orderBy(col("score").desc, col("vec_id").asc)
     scored.withColumn("rank", row_number().over(w).cast("long"))
       .filter(col("rank") <= topK)
-      .select(col("query_id"), col("rank"), col("vec_id"), col("cid"), col("score"))
-      .orderBy("query_id", "rank")
+      .select((Seq("query_id", "rank", "vec_id", "cid", "score") ++ scored.columns.drop(4))
+        .map(col): _*)
   }
 
   /** C3: IVF probe search for the first `nQueries` vectors: rank the
@@ -382,6 +430,7 @@ object AnnIvf {
       .withColumn("cid", nearestCentroid(col("embedding"), centroids))
     val (q, _) = probeFrame(spark, collectQueries(e.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"))), centroids, nprobe)
-    topKOf(e.join(broadcast(q), col("cid") === col("probe_cid")), topK, excludeSelf = true)
+    rankedOf(e.join(broadcast(q), col("cid") === col("probe_cid")), topK,
+      excludeSelf = true, Nil).orderBy("query_id", "rank")
   }
 }

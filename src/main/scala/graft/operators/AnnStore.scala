@@ -153,9 +153,22 @@ private[graft] object AnnStore {
     * memo surviving it is correct by the same argument the HNSW cache makes.
     * Stores without a live manifest are never cached (nothing to invalidate
     * on). Serve paths only — build/refresh keep direct reads.
+    *
+    * The memo holds at most [[ServeMemoCapacity]] entries; past that it
+    * evicts the least recently used ONE, so the hot sidecars of the stores
+    * being served survive a burst of cold ones. A returned value is shared
+    * by every caller that hits the same key: callers must not mutate it.
     */
+  private[graft] val ServeMemoCapacity = 64
+
   private val serveReadMemo =
-    scala.collection.concurrent.TrieMap.empty[(String, String, String), AnyRef]
+    new java.util.LinkedHashMap[(String, String, String), AnyRef](16, 0.75f, true) {
+      override def removeEldestEntry(
+          e: java.util.Map.Entry[(String, String, String), AnyRef]): Boolean =
+        size() > ServeMemoCapacity
+    }
+
+  private[graft] def serveMemoSize: Int = serveReadMemo.synchronized(serveReadMemo.size())
 
   private[graft] def memoizedRead[T <: AnyRef](spark: SparkSession,
       storeRoot: String, tag: String)(load: => T): T =
@@ -163,12 +176,11 @@ private[graft] object AnnStore {
       case None => load
       case Some(m) =>
         val key = (storeRoot, tag, m)
-        serveReadMemo.get(key) match {
+        serveReadMemo.synchronized(Option(serveReadMemo.get(key))) match {
           case Some(v) => v.asInstanceOf[T]
           case None =>
-            val v = load
-            if (serveReadMemo.size > 64) serveReadMemo.clear() // bounded session state
-            serveReadMemo.put(key, v)
+            val v = load // outside the lock: a load may run Spark jobs
+            serveReadMemo.synchronized(serveReadMemo.put(key, v))
             v
         }
     }

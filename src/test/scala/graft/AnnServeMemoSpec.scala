@@ -45,4 +45,26 @@ class AnnServeMemoSpec extends SparkSpecBase {
     assert(!(v2 eq v1), "manifest change must invalidate the memo")
     assert(AnnStore.memoizedRead(spark, root, "t")(load()) eq v2)
   }
+
+  test("memoizedRead: past its capacity the memo evicts one entry, not all; the latest entries still hit") {
+    val root = Files.createTempDirectory("graft_memo_cap").toString + "/store"
+    AnnStore.fileSystem(spark, root).mkdirs(new Path(root))
+    writeManifest(root, """{"version":1,"kind":"x","fingerprint":"cap"}""")
+    val cap = AnnStore.ServeMemoCapacity
+    var loads = 0
+    def read(tag: Int): AnyRef =
+      AnnStore.memoizedRead(spark, root, s"t$tag") { loads += 1; new Object }
+    val n = cap + 10
+    val first = (0 until n).map(read)
+    assert(loads == n)
+    assert(AnnStore.serveMemoSize <= cap, s"memo grew to ${AnnStore.serveMemoSize}")
+    // the last `cap` inserts all survive: no clear-everything at the bound
+    val hot = n - cap until n
+    hot.foreach(t => assert(read(t) eq first(t), s"entry t$t was evicted"))
+    assert(loads == n, "a recent entry reloaded")
+    // the oldest entry was the one evicted
+    read(0)
+    assert(loads == n + 1)
+    assert(AnnStore.serveMemoSize <= cap)
+  }
 }
