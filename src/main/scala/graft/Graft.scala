@@ -673,16 +673,14 @@ class Graft(spark: SparkSession, sfDir: String,
           .collect()
         chunkHitResults(path, hits)
       }
-      case "pq" | "opq" | "sq8" => operators.AnnStore.releasingPinned(spark) {
+      case "pq" | "opq" | "sq8" =>
         val path = ensureChunkKindIndex(indexKind)
-        val served = indexKind match {
-          case "pq" => operators.AnnPq.annPqServedOver(spark, path, qFrame, kT)
-          case "opq" => operators.AnnOpq.annOpqServedOver(spark, path, qFrame, kT)
-          case _ => operators.AnnSq.annSq8ServedOver(spark, path, qFrame, kT)
-        }
+        // the store says whether it rotates: one PQ serve for pq and opq
+        val served =
+          if (indexKind == "sq8") operators.AnnSq.annSq8ServedOver(spark, path, qFrame, kT)
+          else operators.AnnPq.annPqServedOver(spark, path, qFrame, kT)
         val buckets = operators.AnnStore.readManifest(spark, path)
-          .flatMap(m => operators.AnnStore.manifestInt(m, "buckets"))
-          .getOrElse(operators.AnnPq.MinBuckets)
+          .fold(operators.AnnPq.MinBuckets)(operators.AnnPq.manifestBuckets)
         // hash-bucketed stores: each hit's cell is pure arithmetic on its
         // vec_id — recomputed in-plan, so the metadata read stays pruned
         val hits = served
@@ -690,7 +688,6 @@ class Graft(spark: SparkSession, sfDir: String,
           .select(col("query_id"), col("vec_id"), col("cid"), col("score"))
           .collect()
         chunkHitResults(path, hits)
-      }
       case "late" => operators.AnnStore.releasingPinned(spark) {
         val path = ensureChunkKindIndex("late")
         val tx = TransformerEmbedder.seeded(spark)
@@ -770,15 +767,12 @@ class Graft(spark: SparkSession, sfDir: String,
             "chunkSize" -> chunkSize, "chunkOverlap" -> chunkOverlap,
             "model" -> modelName), fp)
         operators.AnnStore.ensureIndex(spark, path, manifest) {
-          kind match {
-            case "pq" => operators.AnnPq.writePqIndexOver(spark,
-              chunkVectors(buildIndex()), path, m = 8, ks = 16, iters = 3, manifest)
-            case "opq" => operators.AnnOpq.writeOpqIndexOver(spark,
-              chunkVectors(buildIndex()), path, m = 8, ks = 16,
-              innerIters = 2, rounds = 2, manifest)
-            case _ => operators.AnnSq.writeSqIndexOver(spark,
-              chunkVectors(buildIndex()), path, manifest)
-          }
+          val vecs = chunkVectors(buildIndex())
+          val opq = kind == "opq"
+          if (kind == "sq8") operators.AnnSq.writeSqIndexOver(spark, vecs, path, manifest)
+          else operators.AnnPq.writePqIndexOver(spark, vecs, path, m = 8, ks = 16,
+            iters = if (opq) operators.AnnPq.OpqIters else 3,
+            rounds = if (opq) operators.AnnPq.OpqRounds else 0, manifest)
         }
       case "late" =>
         val tx = TransformerEmbedder.seeded(spark)
@@ -1143,8 +1137,11 @@ class Graft(spark: SparkSession, sfDir: String,
     scored.select(col("doc_id"), col("chunk_idx"),
         substring(col("chunk_text"), 1, 120).as("snippet"),
         round(col("cross") + lit(1e-9), 4).as("score"))
+      // the pool is bounded (≤ candDepth rows): one partition, keyed so
+      // the optimizer cannot fold it into an unpartitioned window
       .withColumn("rank", row_number().over(
-        org.apache.spark.sql.expressions.Window.partitionBy(lit(1))
+        org.apache.spark.sql.expressions.Window
+          .partitionBy(operators.Ranks.onePartitionKey(col("doc_id")))
           .orderBy(col("score").desc, col("doc_id").asc, col("chunk_idx").asc))
         .cast("long"))
       .filter(col("rank") <= kk)

@@ -119,26 +119,30 @@ object SparkEntry {
       AnnSq.ensureSqIndex(s, dir, path)
       AnnSq.annSq8Served(s, dir, path)
     }),
-    // C5 likewise rows-only (per-subspace k-means); AnnIvfSpec bounds recall.
+    // C5 likewise rows-only (per-subspace k-means, AnnPq with
+    // rounds = 0: no rotation); AnnIvfSpec bounds recall.
     "ann_pq" -> ((s, dir) => AnnPq.annPq(s, dir)),
-    // C5o: OPTIMIZED PQ (Ge et al. 2013) — a learned orthogonal rotation
-    // before the subspace split, trained by monotone alternation (warm
-    // k-means sweep / Procrustes SVD). Rows-only; AnnOpqSpec receipts the
-    // coordinate-descent trace, never-worse-than-PQ error, orthogonality,
-    // determinism, and recall non-inferiority vs plain PQ.
-    "ann_opq" -> ((s, dir) => AnnOpq.annOpq(s, dir)),
-    // the SERVING path of C5o: ADC over persisted OPQ codes with the
-    // stored rotation applied to queries scan-side; training amortized
+    // C5o: OPTIMIZED PQ (Ge et al. 2013) — the same AnnPq quantizer with
+    // rounds > 0: a learned orthogonal rotation before the subspace split,
+    // trained by monotone alternation (warm k-means sweep / Procrustes
+    // SVD). Rows-only; AnnOpqSpec receipts the coordinate-descent trace,
+    // never-worse-than-PQ error, orthogonality, determinism, and recall
+    // non-inferiority vs plain PQ.
+    "ann_opq" -> ((s, dir) =>
+      AnnPq.annPq(s, dir, iters = AnnPq.OpqIters, rounds = AnnPq.OpqRounds)),
+    // the SERVING path of C5o: AnnPq's one ADC serve over the OPQ store,
+    // which rotates queries by its stored rotation; training amortized
     // into the gated build. Rows-only; spec asserts row-identity with
     // ann_opq and pinned-model code recomputation under refresh.
     "ann_opq_served" -> ((s, dir) => {
-      val path = AnnOpq.defaultIndexPath(dir)
-      AnnOpq.ensureOpqIndex(s, dir, path)
-      AnnOpq.annOpqServed(s, path)
+      val path = AnnPq.defaultIndexPath(dir, rounds = AnnPq.OpqRounds)
+      AnnPq.ensurePqIndex(s, dir, path, iters = AnnPq.OpqIters, rounds = AnnPq.OpqRounds)
+      AnnPq.annPqServed(s, path)
     }),
     // the SERVING path of C5: ADC over the persisted codes with codebook
-    // training amortized into the gated index build. Rows-only; spec
-    // asserts row-identity with ann_pq.
+    // training amortized into the gated index build (the store has no
+    // rotation, so the serve rotates nothing). Rows-only; spec asserts
+    // row-identity with ann_pq.
     "ann_pq_served" -> ((s, dir) => {
       val path = AnnPq.defaultIndexPath(dir)
       AnnPq.ensurePqIndex(s, dir, path)
@@ -530,10 +534,12 @@ object SparkEntry {
       "ann_graph.serve" -> ((s, dir) =>
         AnnGraph.annGraphServed(s, s"$scratch/graph")),
       "ann_opq.build" -> ((s, dir) => {
-        AnnOpq.ensureOpqIndex(s, dir, fresh(s, "opq")); one(s)
+        AnnPq.ensurePqIndex(s, dir, fresh(s, "opq"),
+          iters = AnnPq.OpqIters, rounds = AnnPq.OpqRounds)
+        one(s)
       }),
       "ann_opq.serve" -> ((s, dir) =>
-        AnnOpq.annOpqServed(s, s"$scratch/opq")),
+        AnnPq.annPqServed(s, s"$scratch/opq")),
       "quality_classifier.build" -> ((s, dir) => {
         qcModelCache.put(dir, TextAnalysis.qualityClassifierFit(
           TextAnalysis.qualityClassifierInput(s, dir),

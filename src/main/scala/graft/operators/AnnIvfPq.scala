@@ -109,7 +109,6 @@ object AnnIvfPq {
                                  centroids: Array[Array[Double]],
                                  books: Array[Array[Array[Double]]],
                                  sd: Int): Unit = {
-    import spark.implicits._
     val m = books.length
     val codeCols = (0 until m).map(j =>
       VecExprs.centroidAssign(slice(col("res"), j * sd + 1, sd), books(j),
@@ -121,10 +120,7 @@ object AnnIvfPq {
     // on row membership (a null-cid row drops from both)
     withRes.select(col("vec_id"), col("embedding"), col("cid"))
       .write.partitionBy("cid").parquet(dir + "/vectors")
-    books.zipWithIndex.flatMap { case (book, j) =>
-      book.zipWithIndex.map { case (c, i) => (j, i, c.toSeq) }
-    }.toSeq.toDF("j", "cid", "centroid").coalesce(1)
-      .write.parquet(dir + "/books")
+    AnnPq.writeBooks(spark, dir, books)
     AnnStore.writeCentroids(spark, dir, centroids)
   }
 

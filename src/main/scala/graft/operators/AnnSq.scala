@@ -97,8 +97,7 @@ object AnnSq {
   private[graft] def writeSqIndexOver(spark: SparkSession, e: DataFrame,
                                       path: String, manifestStr: String): Unit =
     AnnStore.writeStaged(spark, path, manifestStr) { staging =>
-      quantize(e, AnnStore.manifestInt(manifestStr, "buckets")
-        .getOrElse(AnnPq.MinBuckets))
+      quantize(e, AnnPq.manifestBuckets(manifestStr))
         .write.partitionBy("cid").parquet(staging + "/vectors")
     }
 
@@ -110,15 +109,12 @@ object AnnSq {
         "buckets" -> AnnPq.bucketCountFor(Tables.embeddings(spark, sfDir).count())),
       AnnStore.corpusFingerprint(spark, sfDir))
 
-  private def manifestBuckets(manifest: String): Int =
-    AnnStore.manifestInt(manifest, "buckets").getOrElse(AnnPq.MinBuckets)
-
   private def writeSqIndexWith(spark: SparkSession, sfDir: String,
                                path: String, manifestStr: String): Unit =
     AnnStore.writeStaged(spark, path, manifestStr) { staging =>
       quantize(Tables.embeddings(spark, sfDir)
         .select(col("vec_id"), col("embedding")),
-        manifestBuckets(manifestStr))
+        AnnPq.manifestBuckets(manifestStr))
         .write.partitionBy("cid").parquet(staging + "/vectors")
     }
 
@@ -140,7 +136,7 @@ object AnnSq {
     AnnStore.refreshIndex(spark, path, manifest,
       assignNew = () => quantize(
         Tables.embeddings(spark, sfDir).select(col("vec_id"), col("embedding")),
-        manifestBuckets(manifest)),
+        AnnPq.manifestBuckets(manifest)),
       rewrite = (affected, rows) => {
         val fs = AnnStore.fileSystem(spark, path)
         affected.foreach { c =>

@@ -198,7 +198,8 @@ private[graft] object AnnStore {
     * localCheckpoint is data loss, not a recompute (the lineage is
     * truncated). Thread-locality matches the single-writer operating model:
     * maintenance owns its thread; readers on other threads are invisible
-    * to it.
+    * to it. The one hand-off is [[inParallel]], whose task threads work for
+    * the caller and join its scope.
     */
   private val pinScope =
     new ThreadLocal[scala.collection.mutable.ArrayBuffer[org.apache.spark.rdd.RDD[_]]]
@@ -225,7 +226,7 @@ private[graft] object AnnStore {
     if (scope != null)
       cp.queryExecution.analyzed.collect {
         case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
-      }.foreach(scope += _)
+      }.foreach(rdd => scope.synchronized(scope += rdd))
     cp
   }
 
@@ -617,16 +618,20 @@ private[graft] object AnnStore {
     * otherwise serializes one driver round each behind the big table
     * writes). Callers pass tasks with NO data dependencies between them,
     * writing to DISTINCT staging subdirectories; content is byte-identical
-    * to the sequential order. Tasks must not create tracked checkpoints
-    * (the pin scope is thread-local by design). First failure rethrows
-    * after every thread finishes, so a crashed build never leaves a
-    * half-written task running behind the raised error; the other tasks'
-    * failures ride along as its suppressed exceptions.
+    * to the sequential order. Each task runs in the caller's
+    * [[releasingPinned]] scope, so a checkpoint a task tracks is released
+    * when the caller's scope closes, as if the caller had taken it. First
+    * failure rethrows after every thread finishes, so a crashed build never
+    * leaves a half-written task running behind the raised error; the other
+    * tasks' failures ride along as its suppressed exceptions.
     */
   private[graft] def inParallel(tasks: Seq[() => Unit]): Unit = {
     val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]
-    val threads = tasks.map(t => new Thread(() =>
-      try t() catch { case e: Throwable => errs.add(e) }))
+    val scope = pinScope.get()
+    val threads = tasks.map(t => new Thread(() => {
+      pinScope.set(scope)
+      try t() catch { case e: Throwable => errs.add(e) }
+    }))
     threads.foreach(_.start())
     threads.foreach(_.join())
     if (!errs.isEmpty) {

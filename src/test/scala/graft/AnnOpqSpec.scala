@@ -1,6 +1,7 @@
 package graft
 
-import graft.operators.{AnnOpq, AnnPq, RagSearch}
+import graft.operators.{AnnPq, RagSearch}
+import graft.operators.AnnPq.{OpqIters, OpqRounds}
 import org.apache.spark.sql.functions._
 
 /** C5o receipts — OPQ (Ge et al. 2013): the learned rotation's own
@@ -14,8 +15,7 @@ class AnnOpqSpec extends SparkSpecBase {
     .filter(col("emb").isNotNull)
 
   test("alternation is coordinate descent: error trace monotone, round 0 is plain PQ") {
-    val model = AnnOpq.trainOpq(corpus, dim = 64, m = 8, ks = 16,
-      innerIters = 2, rounds = 2)
+    val model = AnnPq.train(corpus, m = 8, ks = 16, iters = 2, rounds = 2)
     assert(model.errTrace.length == 3)
     model.errTrace.sliding(2).foreach { w =>
       assert(w(1) <= w(0) * (1 + 1e-9),
@@ -31,7 +31,7 @@ class AnnOpqSpec extends SparkSpecBase {
       s"OPQ must not end worse than its plain-PQ start: ${model.errTrace.toSeq}")
     // the learned rotation is ORTHOGONAL (RᵀR = I): cosine in the rotated
     // space equals cosine in the original, so OPQ results compare 1:1
-    val r = model.rotation
+    val r = model.rotation.get
     for (i <- r.indices; j <- r.indices) {
       val dot = r.indices.map(k => r(k)(i) * r(k)(j)).sum
       val want = if (i == j) 1.0 else 0.0
@@ -53,9 +53,10 @@ class AnnOpqSpec extends SparkSpecBase {
     spark.read.parquet(sf + "/embeddings.parquet")
       .write.parquet(dir + "/embeddings.parquet")
     val path = java.nio.file.Files.createTempDirectory("graft_opq_idx").toString + "/idx"
-    AnnOpq.ensureOpqIndex(spark, dir, path)
-    val served = AnnOpq.annOpqServed(spark, path).collect().map(_.toSeq).toSeq
-    val inline = AnnOpq.annOpq(spark, dir).collect().map(_.toSeq).toSeq
+    AnnPq.ensurePqIndex(spark, dir, path, iters = OpqIters, rounds = OpqRounds)
+    val served = AnnPq.annPqServed(spark, path).collect().map(_.toSeq).toSeq
+    val inline = AnnPq.annPq(spark, dir, iters = OpqIters, rounds = OpqRounds)
+      .collect().map(_.toSeq).toSeq
     assert(served == inline,
       "served OPQ must equal the in-query OPQ row for row (same deterministic model)")
     // live mutation: flip a few vectors → refresh rewrites affected hash
@@ -70,7 +71,8 @@ class AnnOpqSpec extends SparkSpecBase {
     val target = new Path(dir, "embeddings.parquet")
     fs.delete(target, true)
     assert(fs.rename(new Path(tmp), target))
-    val r = AnnOpq.refreshOpqIndex(spark, dir, path).head()
+    val r = AnnPq.refreshPqIndex(spark, dir, path, iters = OpqIters, rounds = OpqRounds)
+      .head()
     assert(r.getString(0) == "incremental", s"mode=${r.getString(0)}")
     assert(r.getAs[Long]("n_changed") == 3 &&
       r.getAs[Long]("n_cells_rewritten") >= 1 &&
@@ -101,17 +103,17 @@ class AnnOpqSpec extends SparkSpecBase {
       assert(storedCodes(id) == want,
         s"vec $id: refreshed code ${storedCodes(id)} != pinned-model assignment $want")
     }
-    assert(AnnOpq.annOpqServed(spark, path).collect().nonEmpty)
+    assert(AnnPq.annPqServed(spark, path).collect().nonEmpty)
   }
 
   test("driver query: shape, determinism, recall within reach of plain PQ") {
-    val out = AnnOpq.annOpq(spark, sf).collect()
+    val out = AnnPq.annPq(spark, sf, iters = OpqIters, rounds = OpqRounds).collect()
     assert(out.map(_.getLong(0)).distinct.sorted.toSeq == (0L until 10L).toSeq)
     for ((q, rows) <- out.groupBy(_.getLong(0))) {
       assert(rows.map(_.getLong(1)).sorted.toSeq == (1L to 5L).toSeq, s"query $q ranks")
       assert(rows.forall(_.getLong(2) != q), "self-match must be excluded")
     }
-    val again = AnnOpq.annOpq(spark, sf).collect()
+    val again = AnnPq.annPq(spark, sf, iters = OpqIters, rounds = OpqRounds).collect()
     assert(out.map(_.toSeq).toSeq == again.map(_.toSeq).toSeq,
       "deterministic training + assignment ⇒ run-stable query")
     // recall vs the exact C1 baseline: at worst marginally below plain

@@ -544,10 +544,13 @@ class AnnRefreshSpec extends SparkSpecBase {
   }
 
   test("IVF and IVF-PQ serves pin no block (probe selection is driver-side)") {
-    import graft.operators.AnnIvfPq
+    import graft.operators.{AnnIvfPq, AnnPq}
     val root = Files.createTempDirectory("graft_serve_pin").toString
     AnnIvf.ensureIvfIndex(spark, sf, root + "/ivf")
     AnnIvfPq.ensureIvfPqIndex(spark, sf, root + "/ivfpq")
+    AnnPq.ensurePqIndex(spark, sf, root + "/pq")
+    AnnPq.ensurePqIndex(spark, sf, root + "/opq", iters = AnnPq.OpqIters,
+      rounds = AnnPq.OpqRounds)
     def queries(path: String) = spark.read.parquet(path + "/vectors")
       .filter(col("vec_id") < 5).select(col("vec_id").as("query_id"), col("embedding").as("qv"))
     val before = spark.sparkContext.getPersistentRDDs.keySet
@@ -555,6 +558,10 @@ class AnnRefreshSpec extends SparkSpecBase {
       .collect().nonEmpty)
     assert(AnnIvfPq.annIvfPqServedOver(spark, root + "/ivfpq", queries(root + "/ivfpq"))
       .collect().nonEmpty)
+    // the flat PQ serve, plain and rotated (OPQ)
+    for (kind <- Seq("pq", "opq"))
+      assert(AnnPq.annPqServedOver(spark, s"$root/$kind", queries(s"$root/$kind"))
+        .collect().nonEmpty, kind)
     assert(spark.sparkContext.getPersistentRDDs.keySet == before,
       "a serve call must not leave a pinned block behind")
   }

@@ -141,4 +141,15 @@ class AnnStoreSpec extends SparkSpecBase {
     assert(e.getSuppressed.length == 1)
     assert(Set(e.getMessage, e.getSuppressed.head.getMessage) == Set("a", "b"))
   }
+
+  test("inParallel tasks run in the caller's pin scope: their tracked checkpoints are released") {
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    AnnStore.releasingPinned(spark) {
+      AnnStore.inParallel(Seq(
+        () => AnnStore.trackedCheckpoint(spark.range(50).toDF("x")).count(): Unit,
+        () => AnnStore.trackedCheckpoint(spark.range(60).toDF("y")).count(): Unit))
+    }
+    assert(spark.sparkContext.getPersistentRDDs.keySet == before,
+      "a checkpoint tracked inside an inParallel task must not outlive the caller's scope")
+  }
 }

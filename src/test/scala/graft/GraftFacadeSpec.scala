@@ -94,6 +94,17 @@ class GraftFacadeSpec extends SparkSpecBase {
       "cross rerank must only reorder the retrieved pool, never invent hits")
   }
 
+  test("ragQueryCross ranks its bounded pool in keyed windows: no unpartitioned WindowExec") {
+    import org.apache.spark.sql.execution.window.WindowExec
+    val df = g.ragQueryCross(g.readFile(7, 1, 12), topK = 3)
+    assert(df.collect().length == 3)
+    val unkeyed = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+      .collect(df.queryExecution.executedPlan) {
+        case w: WindowExec if w.partitionSpec.isEmpty => w
+      }
+    assert(unkeyed.isEmpty, s"unpartitioned windows (WindowExec: No Partition Defined): $unkeyed")
+  }
+
   test("ragQuery carries the doc's total token count (the reference's totalLines analog)") {
     val hit = g.ragQuery(g.readFile(7, 1, 12), topK = 1).head()
     assert(hit.getAs[Long]("doc_id") == 7L)

@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators._
+import graft.operators.AnnPq.{OpqIters, OpqRounds}
 import graft.plans.VecExprs
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
@@ -208,7 +209,8 @@ class PerturbEvalAllArmsSpec extends SparkSpecBase {
     // the driver queries' default stores — manifest-gated, built once
     val ivfPath = AnnIvf.defaultIndexPath(sf); AnnIvf.ensureIvfIndex(spark, sf, ivfPath)
     val pqPath = AnnPq.defaultIndexPath(sf); AnnPq.ensurePqIndex(spark, sf, pqPath)
-    val opqPath = AnnOpq.defaultIndexPath(sf); AnnOpq.ensureOpqIndex(spark, sf, opqPath)
+    val opqPath = AnnPq.defaultIndexPath(sf, rounds = OpqRounds)
+    AnnPq.ensurePqIndex(spark, sf, opqPath, iters = OpqIters, rounds = OpqRounds)
     val ivfpqPath = AnnIvfPq.defaultIndexPath(sf); AnnIvfPq.ensureIvfPqIndex(spark, sf, ivfpqPath)
     val sqPath = AnnSq.defaultIndexPath(sf); AnnSq.ensureSqIndex(spark, sf, sqPath)
     val graphPath = AnnGraph.defaultIndexPath(sf); AnnGraph.ensureGraphIndex(spark, sf, graphPath)
@@ -239,7 +241,7 @@ class PerturbEvalAllArmsSpec extends SparkSpecBase {
         topK = k, nprobe = 2), 3 * random),
       ("pq_served", AnnPq.annPqServedOver(spark, pqPath, vecQueries,
         topK = k), 3 * random),
-      ("opq_served", AnnOpq.annOpqServedOver(spark, opqPath, vecQueries,
+      ("opq_served", AnnPq.annPqServedOver(spark, opqPath, vecQueries,
         topK = k), 3 * random),
       ("sq8_served", AnnSq.annSq8ServedOver(spark, sqPath, vecQueries,
         k = k), 0.8),

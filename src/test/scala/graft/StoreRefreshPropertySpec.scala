@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators._
+import graft.operators.AnnPq.{OpqIters, OpqRounds}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -111,12 +112,8 @@ class StoreRefreshPropertySpec extends SparkSpecBase {
     Family("pq", _ => Seq("codes", "vectors", "books"),
       (dir, p) => AnnPq.ensurePqIndex(spark, dir, p),
       (dir, p) => AnnPq.refreshPqIndex(spark, dir, p).head(),
-      (dir, live, out) => {
-        val m = AnnStore.readManifest(spark, live).get
-        AnnPq.writePqIndexWithBooks(spark, dir, out,
-          AnnPq.readBooks(spark, live),
-          AnnStore.manifestInt(m, "buckets").get, m)
-      }),
+      (dir, live, out) => AnnPq.writePqIndexWithModel(spark, dir, out,
+        AnnPq.readModel(spark, live), AnnStore.readManifest(spark, live).get)),
     Family("ivfpq", _ => Seq("codes", "vectors", "books", "centroids"),
       (dir, p) => AnnIvfPq.ensureIvfPqIndex(spark, dir, p),
       (dir, p) => AnnIvfPq.refreshIvfPqIndex(spark, dir, p).head(),
@@ -124,11 +121,11 @@ class StoreRefreshPropertySpec extends SparkSpecBase {
         AnnStore.readCentroids(spark, live), AnnPq.readBooks(spark, live),
         AnnStore.readManifest(spark, live).get)),
     Family("opq", _ => Seq("codes", "vectors", "books", "rotation"),
-      (dir, p) => AnnOpq.ensureOpqIndex(spark, dir, p),
-      (dir, p) => AnnOpq.refreshOpqIndex(spark, dir, p).head(),
-      (dir, live, out) => AnnOpq.writeOpqIndexWithModel(spark, dir, out,
-        AnnOpq.readStoredRotation(spark, live), AnnPq.readBooks(spark, live),
-        AnnStore.readManifest(spark, live).get)),
+      (dir, p) => AnnPq.ensurePqIndex(spark, dir, p, iters = OpqIters, rounds = OpqRounds),
+      (dir, p) =>
+        AnnPq.refreshPqIndex(spark, dir, p, iters = OpqIters, rounds = OpqRounds).head(),
+      (dir, live, out) => AnnPq.writePqIndexWithModel(spark, dir, out,
+        AnnPq.readModel(spark, live), AnnStore.readManifest(spark, live).get)),
     Family("sq8", _ => Seq("vectors"),
       (dir, p) => AnnSq.ensureSqIndex(spark, dir, p),
       (dir, p) => AnnSq.refreshSqIndex(spark, dir, p).head(),
